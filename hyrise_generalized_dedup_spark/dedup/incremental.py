@@ -8,57 +8,37 @@ for data whose outputs are already checkpointed and, being pure per-doc
 / per-pair / per-cluster functions, cannot change.
 
 ``incremental_update(spark, corpus, out_dir)`` takes the FULL current
-corpus (old rows + appended rows), discovers the new docs by
-anti-joining doc ids against the prior signatures checkpoint, and
-produces a checkpoint tree **bit-equal to a from-scratch run over the
-whole corpus** (the pytest equivalence oracle in
-tests/test_incremental.py compares every stage output):
+corpus (old rows + appended rows, minus removed rows) and produces a
+checkpoint tree **bit-equal to a from-scratch run over the whole
+corpus** (tests/test_incremental.py compares every stage output). It
+runs the pipeline's own stage builders and summary (dedup/pipeline.py)
+and adds only the delta layer:
 
-- gd / signatures (content-heavy, per-doc deterministic): computed for
-  NEW docs only and APPENDED into the prior checkpoint dir — prior
-  per-doc rows are immutable, so append is the union and the stage
-  costs O(batch) compute AND O(batch) I/O (rewriting the full parquet
-  just to add a delta was the updater's biggest overhead).
-- reps / candidates / simhash / exact edges (signature-width shuffles,
-  content-free): recomputed over the union — a new doc with a smaller
-  id can take over an exact-signature group's representative, and a
-  grown band bucket can cross the hot-bucket threshold, so per-bucket
-  reuse needs bucket-attributed pairs; recompute is exact by
-  construction and costs ~7% of full-pipeline wall. O(corpus) but thin.
-- LSH verification (the pair-stream kernel): verification is a pure
-  function of (key_a, key_b, is_star) given the signature table, so
-  pairs already decided in the prior run — matched on all three — reuse
-  the prior outcome (edge row kept, rejected pair stays rejected
-  without touching the kernel); only genuinely new pairs are verified.
-  O(new pairs).
-- clusters: recomputed (driver union-find below the edge budget — see
-  cluster.py — makes this a single small job).
-- suffix (content-heavy, per-cluster deterministic —
-  suffix.cluster_substring_edges sorts its member frame): prior edges
-  are reused for CLEAN clusters (identical membership between runs:
-  every member kept its cluster id and the old cluster lost no member)
-  and recomputed only for dirty ones (clusters touched by new docs,
-  merges, or splits). O(dirty-cluster content).
+- discovery: new and removed docs by anti-joining doc ids against the
+  prior signatures checkpoint.
+- per-doc stages (gd, signatures): the kernels run over NEW docs only.
+  Their rows are appended to the prior checkpoint (prior per-doc rows
+  are immutable, so append is the union: O(batch) compute and I/O);
+  under removal the prior rows are instead filtered to alive ids and
+  rewritten — O(corpus) I/O, zero content recompute. Every downstream
+  stage is rebuilt from alive rows only, so no removed doc can come back.
+- LSH verification reuse: a pair's outcome is a pure function of
+  (key_a, key_b, is_star) given the signature table, so prior edges of
+  pairs still in the candidate set are kept and only new pairs reach
+  the kernel. O(new pairs).
+- suffix reuse: prior edges are kept for CLEAN clusters (identical
+  membership: every member kept its cluster id and the old cluster's
+  size is unchanged, so a cluster that lost a member is dirty) and the
+  pass reruns only over dirty ones. O(dirty-cluster content).
+- the swap: every stage's marker comes down before the first write and
+  all recomputed stages are staged beside the live tree until one
+  ``Checkpointer.commit``; a crash leaves the tree unmarked, and
+  ``run_pipeline(resume=True)`` rebuilds it instead of trusting it.
 
-Removed docs (an overwrite/retraction batch — GDPR deletes, licence
-takedowns, force-pushed history) are handled by REWRITING the two
-per-doc checkpoints filtered to alive ids: O(corpus) parquet I/O but
-ZERO content recompute (the gd transform and MinHash kernels — ~75% of
-full-pipeline wall — never run for surviving docs). Every reuse path
-stays exact under removal by construction: candidate pairs are rebuilt
-from alive signatures only, so the (key_a, key_b, is_star) reuse join
-can never resurrect a ghost pair; suffix clean-cluster detection
-compares old/new membership SIZES, so a cluster that lost a member is
-automatically dirty and recomputed from alive content. The pytest
-equivalence oracle covers removal, pure-deletion, and mixed batches
-against from-scratch runs (tests/test_incremental.py).
-
-The checkpoint swap writes every recomputed stage to ``{stage}__inc``
-first, then drops its ``_DONE`` marker, renames, and re-marks; appended
-stages drop their marker BEFORE the append and are re-marked with the
-final swap — any crash leaves the affected stages unmarked and the
-normal resume path re-runs from the first unmarked stage instead of
-trusting a half-updated tree.
+reps, candidates, simhash/exact edges and clusters are recomputed over
+the union (signature-width, content-free shuffles): a new doc with a
+smaller id can take over a representative, and a grown band bucket can
+cross the hot-bucket threshold.
 """
 
 from __future__ import annotations
@@ -68,59 +48,70 @@ import logging
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import fsutil
 from ..config import GDConfig
-from ..session import shuffle_partitions
-from .cluster import connected_components
-from .gd import dedup_stats, gd_segments
-from .lsh import band_table, candidate_pairs, release_candidates, verified_edges
 from .metrics import MetricsCollector
-from .minhash import signatures
-from .pipeline import Checkpointer
-from .simhash import simhash_edges
+from .pipeline import (
+    STAGES,
+    Checkpointer,
+    build_candidates,
+    build_clusters,
+    build_edges,
+    gd_table,
+    prepare_docs,
+    rep_table,
+    run_stage,
+    signature_table,
+    split_reps,
+    suffix_docs,
+    summarize,
+)
 from .suffix import suffix_edges
 
 log = logging.getLogger(__name__)
 
-_LSH_SOURCES = ("lsh", "lsh_star")
+# A pair's verification outcome depends on is_star too (stars get the
+# relaxed floor, lsh.py), so reuse matches on all three columns; the
+# same (a, b) re-emitted under a flipped star mode re-verifies.
+_PAIR_KEY = ["key_a", "key_b", "is_star"]
 
 
-def _write_tmp(ckpt: Checkpointer, stage: str, df: DataFrame) -> DataFrame:
-    """Write a stage's updated output NEXT TO the live checkpoint (the
-    live one may still be an input of a later stage) and read it back
-    (lineage cut, same as Checkpointer.materialize)."""
-    p = ckpt.path(stage) + "__inc"
-    df.write.mode("overwrite").parquet(p)
-    return ckpt.spark.read.parquet(p)
-
-
-def _append_stage(ckpt: Checkpointer, stage: str, new_rows: DataFrame) -> DataFrame:
-    """Append NEW docs' rows into the live checkpoint dir (per-doc stages
-    only — prior rows are immutable there, so append IS the union, and
-    rewriting O(corpus) parquet just to add an O(batch) delta was the
-    updater's single biggest overhead at bench scale). The ``_DONE``
-    marker comes down first and is re-raised only by the final swap: a
-    crash mid-append leaves the stage unmarked and the normal resume path
-    rebuilds it from scratch instead of trusting a half-appended dir."""
-    p = ckpt.path(stage)
-    fsutil.delete(ckpt.spark, fsutil.urljoin(p, "_DONE"))
-    new_rows.write.mode("append").parquet(p)
-    return ckpt.spark.read.parquet(p)
-
-
-def _swap_all(ckpt: Checkpointer, swapped: list[str], appended: list[str]) -> None:
-    """Markers down -> rename __inc over live -> all markers up."""
-    spark = ckpt.spark
-    for stage in swapped:
-        fsutil.delete(spark, fsutil.urljoin(ckpt.path(stage), "_DONE"))
-    for stage in swapped:
-        final = ckpt.path(stage)
-        fsutil.delete(spark, final)
-        fsutil.rename(spark, final + "__inc", final)
-    for stage in swapped + appended:
-        fsutil.write_text(
-            spark, fsutil.urljoin(ckpt.path(stage), "_DONE"), "done\n"
+def _clean_split(
+    ckpt: Checkpointer, clusters: DataFrame, docs: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """``(reused suffix edges of clean clusters, dirty clusters' docs)``."""
+    old_clusters = ckpt.load("clusters").select(
+        "doc_key", F.col("cluster_id").alias("old_cid")
+    )
+    old_sizes = old_clusters.groupBy("old_cid").agg(F.count(F.lit(1)).alias("old_sz"))
+    # clean <=> every member kept its id (cluster_id == old_cid, so no
+    # joins/new docs) AND the old cluster lost nobody (sizes equal) —
+    # identical membership, and per-cluster determinism makes the old
+    # edges exact. Everything else (new docs, merges, splits) is dirty.
+    per_new = (
+        clusters.join(old_clusters, "doc_key", "left")
+        .groupBy("cluster_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.sum(F.when(F.col("old_cid") == F.col("cluster_id"), 1).otherwise(0)).alias(
+                "n_same"
+            ),
         )
+    )
+    clean_cids = (
+        per_new.join(old_sizes, per_new.cluster_id == old_sizes.old_cid)
+        .filter(
+            (F.col("n_members") == F.col("n_same")) & (F.col("old_sz") == F.col("n_members"))
+        )
+        .select("cluster_id")
+    )
+    clean_members = clusters.join(clean_cids, "cluster_id", "left_semi").select(
+        F.col("doc_key").alias("key_a")
+    )
+    reused = ckpt.load("suffix").join(clean_members, "key_a", "left_semi")
+    dirty_docs = clusters.join(clean_cids, "cluster_id", "left_anti").join(
+        suffix_docs(docs), "doc_key"
+    )
+    return reused, dirty_docs
 
 
 def incremental_update(
@@ -133,19 +124,15 @@ def incremental_update(
     """Absorb corpus growth into ``out_dir``'s checkpoint tree.
 
     ``corpus`` is the FULL current corpus (same schema the pipeline
-    takes); new docs are discovered against the prior signatures
-    checkpoint; removed docs are discovered the same way and absorbed by
-    filtering the per-doc checkpoints (module docstring). Returns the
-    updated summary dict. Raises if the prior tree is incomplete
-    (missing ``_DONE``) or config-mismatched (different hash -> no
-    tree)."""
+    takes); new and removed docs are discovered against the prior
+    signatures checkpoint (module docstring). Returns the updated summary
+    dict. Raises if the prior tree is incomplete (a stage not marked
+    done) or config-mismatched (different hash -> no tree)."""
     cfg = cfg or GDConfig()
     ckpt = Checkpointer(spark, out_dir, cfg, resume=True)
     metrics = MetricsCollector(spark, out_dir, cfg.config_hash())
 
-    required = ["gd", "signatures", "reps", "candidates", "edges", "clusters"]
-    if with_suffix_stage:
-        required.append("suffix")
+    required = [s for s in STAGES[:-1] if with_suffix_stage or s != "suffix"]
     missing = [s for s in required if not ckpt.done(s)]
     if missing:
         raise ValueError(
@@ -154,279 +141,92 @@ def incremental_update(
             "pipeline first"
         )
 
-    par = shuffle_partitions(spark)
-    docs = (
-        corpus.withColumn("doc_key", F.concat_ws("|", "repo", "path", "commit"))
-        .withColumn("doc_id", F.xxhash64("doc_key"))
-        .repartition(par * 4)
-        .persist()
-    )
-    # Same near-dup text column as run_pipeline (config.normalizer) —
-    # required for bit-equality between incremental and scratch runs.
-    # `docs_base` keeps the handle to the PERSISTED frame for unpersist.
-    from .pipeline import _sig_text
-
-    docs_base = docs
-    docs = docs.withColumn("sig_text", _sig_text(cfg))
-    key_map = docs.select("doc_id", "doc_key")
-    n_docs = docs.count()
-
-    old_sigs = ckpt.load("signatures")
-    old_ids = old_sigs.select("doc_id")
-    removed_ids = old_ids.join(
-        docs.select("doc_id"), "doc_id", "left_anti"
-    ).persist()
-    n_removed = removed_ids.count()
+    cached, docs = prepare_docs(corpus, cfg)
+    old_ids = ckpt.load("signatures").select("doc_id")
+    removed_ids = old_ids.join(docs.select("doc_id"), "doc_id", "left_anti").persist()
     new_docs = docs.join(old_ids, "doc_id", "left_anti").persist()
-    n_new = new_docs.count()
-    log.info(
-        "incremental_update: %d new / %d removed docs over %d total",
-        n_new,
-        n_removed,
-        n_docs,
-    )
-    if n_new == 0 and n_removed == 0:
-        docs_base.unpersist()
-        new_docs.unpersist()
-        removed_ids.unpersist()
-        return {
-            "n_files": n_docs,
-            "n_new_files": 0,
-            "n_removed_files": 0,
-            "unchanged": True,
-        }
-
-    # Invalidate EVERY stage marker before the first mutation: a crash
-    # anywhere mid-update must leave no stage marked done, because every
-    # prior output is stale w.r.t. the grown corpus — a later
-    # `run_pipeline(resume=True)` would otherwise silently reuse e.g. a
-    # pre-growth signatures checkpoint after gd was already appended.
-    # The final swap re-raises all markers once every stage is current.
-    for stage in required:
-        fsutil.delete(spark, fsutil.urljoin(ckpt.path(stage), "_DONE"))
-
-    # --- gd + signatures: new docs' rows APPENDED to the prior output;
-    # under removal the prior rows are instead filtered to alive ids and
-    # the stage is rewritten via the swap path (I/O, never content
-    # recompute — per-doc rows of surviving docs are immutable) ---
-    def _per_doc_stage(stage: str, new_rows: DataFrame | None) -> DataFrame:
-        if not n_removed:
-            return _append_stage(ckpt, stage, new_rows)
-        alive = ckpt.load(stage).join(removed_ids, "doc_id", "left_anti")
-        if new_rows is not None:
-            alive = alive.unionByName(new_rows)
-        return _write_tmp(ckpt, stage, alive)
-
-    _per_doc_suffix = "__inc" if n_removed else ""
-    metrics.start("gd")
-    segments = _per_doc_stage(
-        "gd",
-        gd_segments(
-            new_docs, cfg, content_col="content", key_cols=("doc_id",), keep_base=False
+    try:
+        n_docs = docs.count()
+        n_removed = removed_ids.count()
+        n_new = new_docs.count()
+        log.info(
+            "incremental_update: %d new / %d removed docs over %d total",
+            n_new,
+            n_removed,
+            n_docs,
         )
-        if n_new
-        else None,
-    )
-    metrics.finish("gd", ckpt.path("gd") + _per_doc_suffix)
 
-    metrics.start("signatures")
-    sigs = _per_doc_stage(
-        "signatures",
-        signatures(new_docs, cfg, text_col="sig_text", key_col="doc_id")
-        if n_new
-        else None,
-    )
-    metrics.finish("signatures", ckpt.path("signatures") + _per_doc_suffix)
+        if n_new == 0 and n_removed == 0:
+            return {"n_files": n_docs, "n_new_files": 0, "n_removed_files": 0, "unchanged": True}
 
-    # --- reps: recomputed over the union (same plan as the pipeline) ---
-    metrics.start("reps")
-    rep_census = sigs.groupBy("minhash").agg(F.min("doc_id").alias("rep"))
-    rep_map = _write_tmp(ckpt, "reps", sigs.join(rep_census, "minhash"))
-    metrics.finish("reps", ckpt.path("reps") + "__inc")
+        # Every prior output is stale w.r.t. the new corpus: unmark them all
+        # before the first write. With the markers down, run_stage recomputes
+        # every stage below instead of loading it.
+        ckpt.invalidate(required)
 
-    rep_sigs = rep_map.filter(F.col("doc_id") == F.col("rep")).drop("rep")
-    exact_edges = rep_map.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("key_a"),
-        F.col("doc_id").alias("key_b"),
-        F.lit(1.0).alias("score"),
-        F.lit("exact").alias("source"),
-    )
+        def stage(name, build, store=ckpt.write_staged):
+            return run_stage(ckpt, metrics, name, build, store)
 
-    # --- candidates: recomputed over the union's representatives ---
-    metrics.start("candidates")
-    raw_pairs = candidate_pairs(band_table(rep_sigs, key_col="doc_id"), cfg, key_col="doc_id")
-    pairs = _write_tmp(ckpt, "candidates", raw_pairs)
-    release_candidates(raw_pairs)
-    metrics.finish("candidates", ckpt.path("candidates") + "__inc")
-
-    # --- edges: reuse prior verification outcomes per (pair, star-mode) ---
-    metrics.start("edges")
-    old_pairs = ckpt.load("candidates").select("key_a", "key_b", "is_star")
-    # A pair's verification outcome depends on is_star too (stars get the
-    # relaxed floor, lsh.py), so reuse matches on all three columns; the
-    # same (a, b) re-emitted under a flipped star mode re-verifies.
-    pair_key = ["key_a", "key_b", "is_star"]
-    decided = pairs.join(old_pairs, pair_key, "left_semi")
-    todo = pairs.join(old_pairs, pair_key, "left_anti")
-    old_lsh = (
-        ckpt.load("edges")
-        .filter(F.col("source").isin(*_LSH_SOURCES))
-        .withColumn("is_star", (F.col("source") == "lsh_star").cast("int"))
-    )
-    reused = old_lsh.join(decided.select(*pair_key), pair_key, "left_semi").drop(
-        "is_star"
-    )
-    n_reps = rep_sigs.count()
-    lsh_raw = verified_edges(todo, rep_sigs, cfg, key_col="doc_id", n_sigs=n_reps)
-    lsh_new = lsh_raw.select(
-        "key_a", "key_b", F.col("jaccard_est").alias("score"), "source"
-    )
-    sim_raw = simhash_edges(rep_sigs, cfg, key_col="doc_id")
-    sim_e = sim_raw.select(
-        "key_a",
-        "key_b",
-        (1.0 - F.col("hamming") / F.lit(cfg.simhash_bits)).alias("score"),
-        "source",
-    )
-    edges = _write_tmp(
-        ckpt,
-        "edges",
-        reused.unionByName(lsh_new).unionByName(sim_e).unionByName(exact_edges),
-    )
-    release_candidates(sim_raw)
-    release_candidates(lsh_raw)
-    metrics.finish("edges", ckpt.path("edges") + "__inc")
-
-    # --- clusters: recomputed (cheap below the driver edge budget) ---
-    metrics.start("clusters")
-    strong = edges.filter(
-        (F.col("source") == "lsh") & (F.col("score") >= cfg.jaccard_threshold)
-        | F.col("source").isin("simhash", "exact", "lsh_star")
-    )
-    cc = connected_components(
-        strong,
-        nodes=docs.select("doc_id"),
-        key_col="doc_id",
-        broadcast_labels_max=5_000_000 if n_docs < 5_000_000 else None,
-    )
-    clusters = _write_tmp(
-        ckpt, "clusters", cc.join(key_map, "doc_id").select("doc_key", "cluster_id")
-    )
-    release_candidates(cc)
-    metrics.finish("clusters", ckpt.path("clusters") + "__inc")
-
-    # --- suffix: reuse clean clusters, recompute dirty ones ---
-    n_dirty = None
-    per_doc = ["gd", "signatures"]
-    appended_stages = per_doc if not n_removed else []
-    swap_stages = (per_doc if n_removed else []) + [
-        "reps",
-        "candidates",
-        "edges",
-        "clusters",
-    ]
-    if with_suffix_stage:
-        metrics.start("suffix")
-        old_clusters = ckpt.load("clusters").select(
-            "doc_key", F.col("cluster_id").alias("old_cid")
-        )
-        old_sizes = old_clusters.groupBy("old_cid").agg(
-            F.count(F.lit(1)).alias("old_sz")
-        )
-        # clean <=> every member kept its id (cluster_id == old_cid, so no
-        # joins/new docs) AND the old cluster lost nobody (sizes equal) —
-        # identical membership, and per-cluster determinism makes the old
-        # edges exact. Everything else (new docs, merges, splits) is dirty.
-        per_new = (
-            clusters.join(old_clusters, "doc_key", "left")
-            .groupBy("cluster_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_members"),
-                F.sum(
-                    F.when(F.col("old_cid") == F.col("cluster_id"), 1).otherwise(0)
-                ).alias("n_same"),
+        def per_doc(name, new_rows):
+            if not n_removed:
+                return ckpt.append(name, new_rows)
+            alive = ckpt.load(name).join(removed_ids, "doc_id", "left_anti")
+            return ckpt.write_staged(
+                name, alive if new_rows is None else alive.unionByName(new_rows)
             )
+
+        segments = stage(
+            "gd", lambda write: write(gd_table(new_docs, cfg) if n_new else None), per_doc
         )
-        clean_cids = (
-            per_new.join(old_sizes, per_new.cluster_id == old_sizes.old_cid)
-            .filter(
-                (F.col("n_members") == F.col("n_same"))
-                & (F.col("old_sz") == F.col("n_members"))
+        sigs = stage(
+            "signatures",
+            lambda write: write(signature_table(new_docs, cfg) if n_new else None),
+            per_doc,
+        )
+        rep_map = stage("reps", lambda write: write(rep_table(sigs)))
+        rep_sigs, exact_edges = split_reps(rep_map)
+        pairs = stage("candidates", lambda write: build_candidates(rep_sigs, cfg, write))
+
+        # Prior pairs that are candidates again keep their prior outcome. Every
+        # prior LSH edge comes from a prior pair with the same key, so semi-
+        # joining the prior edges on the new pairs finds the reused ones.
+        old_pairs = ckpt.load("candidates").select(*_PAIR_KEY)
+        todo = pairs.join(old_pairs, _PAIR_KEY, "left_anti")
+        reused = (
+            ckpt.load("edges")
+            .filter(F.col("source").isin("lsh", "lsh_star"))
+            .withColumn("is_star", (F.col("source") == "lsh_star").cast("int"))
+            .join(pairs.select(*_PAIR_KEY), _PAIR_KEY, "left_semi")
+            .drop("is_star")
+        )
+        edges = stage(
+            "edges",
+            lambda write: build_edges(
+                todo, rep_sigs, exact_edges, cfg, lambda df: write(reused.unionByName(df))
+            ),
+        )
+        clusters = stage(
+            "clusters", lambda write: build_clusters(edges, docs, n_docs, cfg, write)
+        )
+
+        suffix, jobs = None, {"n_reused_lsh_edges": reused.count}
+        if with_suffix_stage:
+            suffix_reused, dirty_docs = _clean_split(ckpt, clusters, docs)
+            suffix = stage(
+                "suffix",
+                lambda write: write(suffix_reused.unionByName(suffix_edges(dirty_docs, cfg))),
             )
-            .select("cluster_id")
-        )
-        clean_members = clusters.join(clean_cids, "cluster_id", "left_semi").select(
-            F.col("doc_key").alias("key_a")
-        )
-        suffix_reused = ckpt.load("suffix").join(clean_members, "key_a", "left_semi")
-        dirty_docs = (
-            clusters.join(clean_cids, "cluster_id", "left_anti")
-            .join(docs.select("doc_key", F.col("sig_text").alias("content")), "doc_key")
-        )
-        n_dirty = dirty_docs.select("cluster_id").distinct().count()
-        suffix = _write_tmp(
-            ckpt,
-            "suffix",
-            suffix_reused.unionByName(suffix_edges(dirty_docs, cfg)),
-        )
-        metrics.finish("suffix", ckpt.path("suffix") + "__inc")
-        swap_stages.append("suffix")
-    else:
-        suffix = None
-        # a prior suffix checkpoint is now stale w.r.t. the grown corpus;
-        # leaving it marked done would let a later resume/incremental
-        # trust it silently — drop it instead
-        if ckpt.done("suffix"):
-            fsutil.delete(spark, ckpt.path("suffix"))
+            jobs["n_dirty_clusters"] = lambda: dirty_docs.select("cluster_id").distinct().count()
+        else:
+            # a prior suffix checkpoint is stale w.r.t. the new corpus; left in
+            # place a later resume/incremental could trust it silently
+            ckpt.discard("suffix")
+            metrics.add(n_dirty_clusters=None)
 
-    # --- summary over the updated outputs (same shape as run_pipeline) ---
-    stats = dedup_stats(segments).collect()[0].asDict()
-    cstats = (
-        clusters.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.sum(F.when(F.col("sz") > 1, 1).otherwise(0)).alias("n_multi"),
-        )
-        .collect()[0]
-    )
-    pstats = pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("is_star").alias("n_star"),
-    ).collect()[0]
-    estats = edges.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-    by_source = {r["source"]: r["n"] for r in estats}
-    n_reused = reused.count()
-    if suffix is not None:
-        suffix_by_source = {
-            r["source"]: r["n"]
-            for r in suffix.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        n_suffix_edges = int(suffix_by_source.get("suffix", 0))
-        n_suffix_overflows = int(suffix_by_source.get("suffix_overflow", 0))
-    else:
-        n_suffix_edges = n_suffix_overflows = None
-    metrics.add(
-        n_files=n_docs,
-        n_new_files=n_new,
-        n_removed_files=n_removed,
-        n_candidate_pairs=int(pstats["n"]),
-        n_star_candidates=int(pstats["n_star"] or 0),
-        n_reused_lsh_edges=n_reused,
-        n_edges=sum(by_source.values()),
-        n_edges_by_source=by_source,
-        n_clusters=cstats["n_clusters"],
-        n_multi_doc_clusters=int(cstats["n_multi"] or 0),
-        n_dirty_clusters=n_dirty,
-        n_suffix_edges=n_suffix_edges,
-        n_suffix_overflows=n_suffix_overflows,
-        **stats,
-    )
-
-    # --- atomic-ish swap: tmp trees become the live checkpoints ---
-    _swap_all(ckpt, swap_stages, appended_stages)
-    metrics.write_summary()
-    docs_base.unpersist()
-    new_docs.unpersist()
-    removed_ids.unpersist()
-    return metrics.summary
+        metrics.add(n_new_files=n_new, n_removed_files=n_removed)
+        summary = summarize(metrics, n_docs, segments, clusters, pairs, edges, suffix, **jobs)
+        ckpt.commit()
+        return summary
+    finally:
+        for df in (cached, new_docs, removed_ids):
+            df.unpersist()

@@ -4,7 +4,7 @@ config -> read -> gd -> signatures -> bands -> candidates -> edges
 (lsh + simhash) -> clusters -> suffix -> summary.
 
 Each stage is a pure function DataFrame -> DataFrame whose output is
-written to ``{out}/checkpoint/{config_hash}/{stage}`` with a ``_DONE``
+written to ``{out}/checkpoint/{config_hash}/{stage}`` with a done
 marker; re-running resumes from the first missing marker (idempotent —
 FIXTURES.md F4.4 requires byte-identical re-runs). The config hash in
 the path makes stale-checkpoint reuse under a changed config impossible.
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import argparse
 import json
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +37,13 @@ from ..config import GDConfig
 from ..session import shuffle_partitions
 from .cluster import connected_components
 from .gd import dedup_stats, gd_segments
-from .lsh import band_table, candidate_pairs, release_candidates, verified_edges
+from .lsh import (
+    band_table,
+    candidate_pairs,
+    release_candidates,
+    retained_sideboard_dirs,
+    verified_edges,
+)
 from .metrics import MetricsCollector
 from .minhash import signatures
 from .simhash import simhash_edges
@@ -48,6 +55,11 @@ STAGES = ("gd", "signatures", "reps", "candidates", "edges", "clusters", "suffix
 class Checkpointer:
     """Stage checkpoints + `_DONE` resume markers, filesystem-agnostic.
 
+    The one owner of the checkpoint layout: ``{root}/{stage}`` holds a
+    stage's parquet and its ``_DONE`` marker; an incremental rewrite
+    stages new output in ``{root}/{stage}__inc`` until ``commit`` swaps
+    it in.
+
     All marker reads/writes go through the Hadoop FS API (fsutil), so
     resume works when ``out_dir`` is ``file://``, ``hdfs://`` or
     ``s3a://`` — the north rule's checkpointed resumability on the
@@ -57,24 +69,80 @@ class Checkpointer:
         self.spark = spark
         self.root = fsutil.urljoin(out_dir, "checkpoint", cfg.config_hash())
         self.resume = resume
+        self._staged: list[str] = []
+        self._appended: list[str] = []
 
     def path(self, stage: str) -> str:
         return fsutil.urljoin(self.root, stage)
 
+    def _marker(self, stage: str) -> str:
+        return fsutil.urljoin(self.path(stage), "_DONE")
+
+    def _staging(self, stage: str) -> str:
+        return self.path(stage) + "__inc"
+
+    def _mark(self, stage: str) -> None:
+        fsutil.write_text(self.spark, self._marker(stage), "done\n")
+
     def done(self, stage: str) -> bool:
-        return self.resume and fsutil.exists(
-            self.spark, fsutil.urljoin(self.path(stage), "_DONE")
-        )
+        return self.resume and fsutil.exists(self.spark, self._marker(stage))
 
     def materialize(self, stage: str, df: DataFrame) -> DataFrame:
         """Write stage output + _DONE marker, read back (lineage cut)."""
         p = self.path(stage)
         df.write.mode("overwrite").parquet(p)
-        fsutil.write_text(self.spark, fsutil.urljoin(p, "_DONE"), "done\n")
+        self._mark(stage)
         return self.spark.read.parquet(p)
 
     def load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.path(stage))
+
+    # --- incremental rewrite: unmark, stage or append, commit ---
+
+    def invalidate(self, stages: list[str]) -> None:
+        """Drop the markers of ``stages`` before the first mutation: a
+        crash anywhere mid-update then leaves every stale stage unmarked,
+        and the normal resume path recomputes it instead of trusting a
+        half-updated tree. ``commit`` re-marks them."""
+        for stage in stages:
+            fsutil.delete(self.spark, self._marker(stage))
+
+    def write_staged(self, stage: str, df: DataFrame) -> DataFrame:
+        """Write a stage's new output NEXT TO the live checkpoint (the live
+        one may still be an input of a later stage) and read it back."""
+        p = self._staging(stage)
+        df.write.mode("overwrite").parquet(p)
+        self._staged.append(stage)
+        return self.spark.read.parquet(p)
+
+    def append(self, stage: str, df: DataFrame) -> DataFrame:
+        """Append rows into the live checkpoint dir and read it back —
+        per-doc stages only, where prior rows are immutable so append IS
+        the union. The marker comes down first; only ``commit`` re-raises
+        it, so a crash mid-append leaves the stage unmarked."""
+        p = self.path(stage)
+        fsutil.delete(self.spark, self._marker(stage))
+        df.write.mode("append").parquet(p)
+        self._appended.append(stage)
+        return self.spark.read.parquet(p)
+
+    def written_path(self, stage: str) -> str:
+        """Where this run wrote ``stage`` (its staging dir until commit)."""
+        return self._staging(stage) if stage in self._staged else self.path(stage)
+
+    def commit(self) -> None:
+        """Markers down -> rename staged over live -> all markers up."""
+        for stage in self._staged:
+            fsutil.delete(self.spark, self._marker(stage))
+        for stage in self._staged:
+            fsutil.delete(self.spark, self.path(stage))
+            fsutil.rename(self.spark, self._staging(stage), self.path(stage))
+        for stage in self._staged + self._appended:
+            self._mark(stage)
+        self._staged, self._appended = [], []
+
+    def discard(self, stage: str) -> None:
+        fsutil.delete(self.spark, self.path(stage))
 
 
 def gc_stale_checkpoints(
@@ -98,11 +166,14 @@ def gc_stale_checkpoints(
     return deleted
 
 
+# --- stage builders shared by run_pipeline and incremental_update ---
+# Builders that cache intermediates take ``write`` (DataFrame ->
+# checkpointed DataFrame) and release the caches once it has returned.
+
+
 def _sig_text(cfg: GDConfig):
     """Near-dup text Column for ``cfg.normalizer`` ("raw" = the stored
-    content; "format"/"type2" = functions/code canonical forms). Shared
-    by run_pipeline and incremental_update so both derive bit-identical
-    signature inputs."""
+    content; "format"/"type2" = functions/code canonical forms)."""
     if cfg.normalizer == "format":
         from ..functions.code import normalize_code
 
@@ -112,6 +183,238 @@ def _sig_text(cfg: GDConfig):
 
         return normalize_tokens(F.col("content"))
     return F.col("content")
+
+
+def prepare_docs(code_files: DataFrame, cfg: GDConfig) -> tuple[DataFrame, DataFrame]:
+    """Key the corpus; returns ``(cached, docs)``.
+
+    ``cached`` is the persisted frame — unpersist it when done
+    (unpersisting the withColumn derivative would leave the cache
+    pinned). ``docs`` adds the near-dup text column ``sig_text``:
+    identity for "raw", else the JVM-side canonical form (map work inside
+    the same stage as the signature kernel — no extra shuffle, content
+    bytes untouched). GD + the sha256 round-trip always see raw content."""
+    # 4 partitions per core: variable file sizes (KB..MB) make equal-split
+    # partitions straggle; finer tasks let the scheduler level them.
+    # doc_key (human lineage key) is mapped to a compact int64 doc_id for
+    # every shuffle-heavy stage — the pair path moves 8-byte keys, not
+    # ~90-byte composite strings (the late-materialization lesson applied
+    # to join keys; 64-bit is sandbox-scale, production would widen to 128).
+    par = shuffle_partitions(code_files.sparkSession)
+    cached = (
+        code_files.withColumn("doc_key", F.concat_ws("|", "repo", "path", "commit"))
+        .withColumn("doc_id", F.xxhash64("doc_key"))
+        .repartition(par * 4)
+        .persist()  # gd, signatures, clusters and the summary all consume
+        # docs; without persist the repartition exchange (full content
+        # shuffle) re-executes once per consumer
+    )
+    return cached, cached.withColumn("sig_text", _sig_text(cfg))
+
+
+def gd_table(docs: DataFrame, cfg: GDConfig) -> DataFrame:
+    """gd: the segment table (content stays columnar-local)."""
+    return gd_segments(docs, cfg, content_col="content", key_cols=("doc_id",), keep_base=False)
+
+
+def signature_table(docs: DataFrame, cfg: GDConfig) -> DataFrame:
+    """signatures: minhash + simhash + band keys, one pass."""
+    return signatures(docs, cfg, text_col="sig_text", key_col="doc_id")
+
+
+def rep_table(sigs: DataFrame) -> DataFrame:
+    """reps: every signature row with its exact-signature representative.
+
+    Docs with IDENTICAL minhash signatures (exact duplicates and the
+    vendored-library family) are collapsed to one representative BEFORE
+    LSH: the m-copy family costs m exact edges instead of flooding every
+    band bucket — the dictionary-encoder move (dedupe first, reference
+    dictionary_encoder.hpp:61-88) applied to the signature table."""
+    # groupBy census + join-back, NOT a window over minhash: a window
+    # materializes every identical-signature family in ONE task (a
+    # 10^8-copy vendored-library family = one straggler at 100 TB).
+    # groupBy gets map-side partial aggregation (the family collapses
+    # inside each upstream partition first) and the join-back is
+    # covered by AQE skew-join. Same pattern as lsh.candidate_pairs.
+    rep_census = sigs.groupBy("minhash").agg(F.min("doc_id").alias("rep"))
+    return sigs.join(rep_census, "minhash")
+
+
+def split_reps(rep_map: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(rep_sigs, exact_edges)``: the representatives' signatures, and
+    one exact edge from each representative to every other member."""
+    rep_sigs = rep_map.filter(F.col("doc_id") == F.col("rep")).drop("rep")
+    exact_edges = rep_map.filter(F.col("doc_id") != F.col("rep")).select(
+        F.col("rep").alias("key_a"),
+        F.col("doc_id").alias("key_b"),
+        F.lit(1.0).alias("score"),
+        F.lit("exact").alias("source"),
+    )
+    return rep_sigs, exact_edges
+
+
+def build_candidates(rep_sigs: DataFrame, cfg: GDConfig, write) -> DataFrame:
+    """candidates: LSH buckets over representatives, skew-routed."""
+    raw_pairs = candidate_pairs(band_table(rep_sigs, key_col="doc_id"), cfg, key_col="doc_id")
+    pairs = write(raw_pairs)
+    release_candidates(raw_pairs)  # checkpoint written — drop the cache
+    return pairs
+
+
+def build_edges(
+    pairs: DataFrame, rep_sigs: DataFrame, exact_edges: DataFrame, cfg: GDConfig, write
+) -> DataFrame:
+    """edges: verified LSH ``pairs`` + simhash + the exact-dup edges."""
+    # Broadcast decision sized on the REPRESENTATIVE count, not n_docs:
+    # on dup-heavy corpora reps ≪ docs, and the n_docs upper bound pushed
+    # broadcast-eligible corpora near the cliff onto the 3-10× slower
+    # shuffled path. rep_sigs reads the reps checkpoint, so this count is
+    # one cheap scan, paid only when the edges stage actually runs.
+    n_reps = rep_sigs.count()
+    lsh_raw = verified_edges(pairs, rep_sigs, cfg, key_col="doc_id", n_sigs=n_reps)
+    lsh_e = lsh_raw.select("key_a", "key_b", F.col("jaccard_est").alias("score"), "source")
+    sim_raw = simhash_edges(rep_sigs, cfg, key_col="doc_id")
+    sim_e = sim_raw.select(
+        "key_a",
+        "key_b",
+        (1.0 - F.col("hamming") / F.lit(cfg.simhash_bits)).alias("score"),
+        "source",
+    )
+    edges = write(lsh_e.unionByName(sim_e).unionByName(exact_edges))
+    release_candidates(sim_raw)  # simhash's internal band cache
+    release_candidates(lsh_raw)  # verification's broadcast signature block
+    return edges
+
+
+def build_clusters(
+    edges: DataFrame, docs: DataFrame, n_docs: int, cfg: GDConfig, write
+) -> DataFrame:
+    """clusters: connected components, deterministic min-key id."""
+    # lsh_star edges are hot-bucket clique approximations: kept for
+    # connectivity (dropping them would silently cut recall under skew),
+    # tracked under their own source so the approximation is auditable in
+    # the edges table.
+    strong = edges.filter(
+        (F.col("source") == "lsh") & (F.col("score") >= cfg.jaccard_threshold)
+        | F.col("source").isin("simhash", "exact", "lsh_star")
+    )
+    # labels broadcast while the corpus is below ~5M docs (~80MB of int64
+    # pairs) — CC is a latency-bound chain of small jobs and the
+    # per-iteration shuffle dominates it; beyond that bound the join stays
+    # shuffled (see connected_components docstring).
+    cc = connected_components(
+        strong,
+        nodes=docs.select("doc_id"),
+        key_col="doc_id",
+        broadcast_labels_max=5_000_000 if n_docs < 5_000_000 else None,
+    )
+    key_map = docs.select("doc_id", "doc_key")
+    clusters = write(cc.join(key_map, "doc_id").select("doc_key", "cluster_id"))
+    release_candidates(cc)  # CC's final label checkpoint
+    return clusters
+
+
+def suffix_docs(docs: DataFrame) -> DataFrame:
+    """The suffix pass's input: each doc's near-dup text as ``content``."""
+    return docs.select("doc_key", F.col("sig_text").alias("content"))
+
+
+def run_stage(ckpt: Checkpointer, metrics: MetricsCollector, stage: str, build, store):
+    """Load ``stage`` if its checkpoint is done; else, inside the stage's
+    one MetricsCollector span, run ``build(write)``, where ``write(df)`` is
+    ``store(stage, df)`` and returns the written frame."""
+    if ckpt.done(stage):
+        return ckpt.load(stage)
+    metrics.start(stage)
+    out = build(lambda df: store(stage, df))
+    metrics.finish(stage, ckpt.written_path(stage))
+    return out
+
+
+def _count_by_source(df: DataFrame) -> dict[str, int]:
+    return {
+        r["source"]: r["n"]
+        for r in df.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def summarize(
+    metrics: MetricsCollector,
+    n_docs: int,
+    segments: DataFrame,
+    clusters: DataFrame,
+    pairs: DataFrame,
+    edges: DataFrame,
+    suffix: DataFrame | None,
+    **jobs,
+) -> dict[str, object]:
+    """Add the run summary to ``metrics``, write it and return it.
+
+    The aggregations are independent small jobs over already-checkpointed
+    parquet — run from a driver thread pool so later jobs back-fill the
+    earlier ones' straggler tails (guide §2.6 overlap of independent jobs;
+    results are exact regardless of order). Each extra ``jobs`` entry is a
+    zero-arg callable run on the same pool; its result lands in the
+    summary under its name."""
+    def cluster_stats():
+        # one job for both cluster statistics (count + multi-doc count)
+        return (
+            clusters.groupBy("cluster_id")
+            .agg(F.count(F.lit(1)).alias("sz"))
+            .agg(
+                F.count(F.lit(1)).alias("n_clusters"),
+                F.sum(F.when(F.col("sz") > 1, 1).otherwise(0)).alias("n_multi"),
+            )
+            .collect()[0]
+        )
+
+    own = {
+        "stats": lambda: dedup_stats(segments).collect()[0].asDict(),
+        "cstats": cluster_stats,
+        # candidate-pair stats: total + how many came from the hot-bucket
+        # star path — the star-edge approximation stays auditable from the
+        # summary alone (ADVICE r2)
+        "pstats": lambda: pairs.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("is_star").alias("n_star")
+        ).collect()[0],
+        "by_source": lambda: _count_by_source(edges),
+    }
+    if suffix is not None:
+        # one groupBy("source") job gives both suffix summary counts
+        # (edges + overflows) instead of two filtered .count() scans
+        own["suffix_by_source"] = lambda: _count_by_source(suffix)
+    with ThreadPoolExecutor(max_workers=len(own) + len(jobs)) as pool:
+        own_f = {k: pool.submit(fn) for k, fn in own.items()}
+        job_f = {k: pool.submit(fn) for k, fn in jobs.items()}
+        res = {k: f.result() for k, f in own_f.items()}
+        extra = {k: f.result() for k, f in job_f.items()}
+    cstats, pstats, by_source = res["cstats"], res["pstats"], res["by_source"]
+    n_star_kept = int(by_source.get("lsh_star", 0))
+    n_star_cand = int(pstats["n_star"] or 0)
+    sfx = res.get("suffix_by_source")
+    retained = retained_sideboard_dirs()
+    metrics.add(
+        n_files=n_docs,
+        n_candidate_pairs=int(pstats["n"]),
+        n_star_candidates=n_star_cand,
+        n_star_edges_kept=n_star_kept,
+        n_star_edges_dropped=n_star_cand - n_star_kept,
+        n_edges=sum(by_source.values()),
+        n_edges_by_source=by_source,
+        n_clusters=cstats["n_clusters"],
+        n_multi_doc_clusters=int(cstats["n_multi"] or 0),
+        n_suffix_edges=None if sfx is None else int(sfx.get("suffix", 0)),
+        n_suffix_overflows=None if sfx is None else int(sfx.get("suffix_overflow", 0)),
+        # non-local masters retain sideboard source dirs on driver disk
+        # until interpreter exit (lazy addFile fetch, see dedup/lsh.py);
+        # surfaced here so multi-run sessions see the accumulation.
+        n_retained_sideboard_dirs=len(retained),
+        retained_sideboard_bytes=sum(b for _, b in retained),
+        **res["stats"],
+        **extra,
+    )
+    metrics.write_summary()
+    return metrics.summary
 
 
 def run_pipeline(
@@ -126,258 +429,39 @@ def run_pipeline(
     cfg = cfg or GDConfig()
     ckpt = Checkpointer(spark, out_dir, cfg, resume=resume)
     metrics = MetricsCollector(spark, out_dir, cfg.config_hash())
+    cached, docs = prepare_docs(code_files, cfg)
+    try:
+        # One count up front (docs is persisted, so this also warms the cache);
+        # reused for the CC broadcast decision and the summary — never
+        # re-counted per stage.
+        n_docs = docs.count()
 
-    # 4 partitions per core: variable file sizes (KB..MB) make equal-split
-    # partitions straggle; finer tasks let the scheduler level them.
-    # doc_key (human lineage key) is mapped to a compact int64 doc_id for
-    # every shuffle-heavy stage — the pair path moves 8-byte keys, not
-    # ~90-byte composite strings (the late-materialization lesson applied
-    # to join keys; 64-bit is sandbox-scale, production would widen to 128).
-    par = shuffle_partitions(spark)
-    docs = (
-        code_files.withColumn("doc_key", F.concat_ws("|", "repo", "path", "commit"))
-        .withColumn("doc_id", F.xxhash64("doc_key"))
-        .repartition(par * 4)
-        .persist()  # gd, signatures, clusters and the summary all consume
-        # docs; without persist the repartition exchange (full content
-        # shuffle) re-executes once per consumer
-    )
-    # Near-dup text column: identity for "raw", else the JVM-side
-    # canonical form (map work inside the same stage as the signature
-    # kernel — no extra shuffle, content bytes untouched). GD + the
-    # sha256 round-trip always see raw content. `docs_base` keeps the
-    # handle to the PERSISTED frame (unpersisting the withColumn
-    # derivative would leave the cache pinned).
-    docs_base = docs
-    docs = docs.withColumn("sig_text", _sig_text(cfg))
-    key_map = docs.select("doc_id", "doc_key")
-    # One count up front (docs is persisted, so this also warms the cache);
-    # reused for the edge-verification broadcast decision and the summary —
-    # never re-counted per stage.
-    n_docs = docs.count()
+        def stage(name, build):
+            return run_stage(ckpt, metrics, name, build, ckpt.materialize)
 
-    # --- stage: gd (segment table; content stays columnar-local) ---
-    if ckpt.done("gd"):
-        segments = ckpt.load("gd")
-    else:
-        metrics.start("gd")
-        segments = gd_segments(
-            docs, cfg, content_col="content", key_cols=("doc_id",), keep_base=False
+        segments = stage("gd", lambda write: write(gd_table(docs, cfg)))
+        sigs = stage("signatures", lambda write: write(signature_table(docs, cfg)))
+        rep_map = stage("reps", lambda write: write(rep_table(sigs)))
+        rep_sigs, exact_edges = split_reps(rep_map)
+        pairs = stage("candidates", lambda write: build_candidates(rep_sigs, cfg, write))
+        edges = stage(
+            "edges", lambda write: build_edges(pairs, rep_sigs, exact_edges, cfg, write)
         )
-        segments = ckpt.materialize("gd", segments)
-        metrics.finish("gd", ckpt.path("gd"))
-
-    # --- stage: signatures (minhash + simhash + band keys, one pass) ---
-    if ckpt.done("signatures"):
-        sigs = ckpt.load("signatures")
-    else:
-        metrics.start("signatures")
-        sigs = signatures(docs, cfg, text_col="sig_text", key_col="doc_id")
-        sigs = ckpt.materialize("signatures", sigs)
-        metrics.finish("signatures", ckpt.path("signatures"))
-
-    # --- stage: reps (exact-signature pre-dedup) ---
-    # Docs with IDENTICAL minhash signatures (exact duplicates and the
-    # vendored-library family) are collapsed to one representative BEFORE
-    # LSH: the m-copy family costs m exact edges instead of flooding every
-    # band bucket — the dictionary-encoder move (dedupe first, reference
-    # dictionary_encoder.hpp:61-88) applied to the signature table.
-    if ckpt.done("reps"):
-        rep_map = ckpt.load("reps")
-    else:
-        metrics.start("reps")
-        # groupBy census + join-back, NOT a window over minhash: a window
-        # materializes every identical-signature family in ONE task (a
-        # 10^8-copy vendored-library family = one straggler at 100 TB).
-        # groupBy gets map-side partial aggregation (the family collapses
-        # inside each upstream partition first) and the join-back is
-        # covered by AQE skew-join. Same pattern as lsh.candidate_pairs.
-        rep_census = sigs.groupBy("minhash").agg(F.min("doc_id").alias("rep"))
-        rep_map = sigs.join(rep_census, "minhash")
-        rep_map = ckpt.materialize("reps", rep_map)
-        metrics.finish("reps", ckpt.path("reps"))
-
-    rep_sigs = rep_map.filter(F.col("doc_id") == F.col("rep")).drop("rep")
-    exact_edges = rep_map.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("key_a"),
-        F.col("doc_id").alias("key_b"),
-        F.lit(1.0).alias("score"),
-        F.lit("exact").alias("source"),
-    )
-
-    # --- stage: candidates (LSH buckets over representatives, skew-routed) ---
-    if ckpt.done("candidates"):
-        pairs = ckpt.load("candidates")
-    else:
-        metrics.start("candidates")
-        raw_pairs = candidate_pairs(band_table(rep_sigs, key_col="doc_id"), cfg, key_col="doc_id")
-        pairs = ckpt.materialize("candidates", raw_pairs)
-        release_candidates(raw_pairs)  # checkpoint written — drop the cache
-        metrics.finish("candidates", ckpt.path("candidates"))
-
-    # --- stage: edges (verified LSH + simhash + exact-dup attachment) ---
-    if ckpt.done("edges"):
-        edges = ckpt.load("edges")
-    else:
-        metrics.start("edges")
-        # Broadcast decision sized on the REPRESENTATIVE count, not
-        # n_docs: on dup-heavy corpora reps ≪ docs, and the n_docs upper
-        # bound pushed broadcast-eligible corpora near the cliff onto the
-        # 3-10× slower shuffled path. rep_map is already checkpointed
-        # parquet, so this count is one cheap scan, paid only when the
-        # edges stage actually runs.
-        n_reps = rep_sigs.count()
-        lsh_raw = verified_edges(pairs, rep_sigs, cfg, key_col="doc_id", n_sigs=n_reps)
-        lsh_e = lsh_raw.select(
-            "key_a", "key_b", F.col("jaccard_est").alias("score"), "source"
+        clusters = stage(
+            "clusters", lambda write: build_clusters(edges, docs, n_docs, cfg, write)
         )
-        sim_raw = simhash_edges(rep_sigs, cfg, key_col="doc_id")
-        sim_e = sim_raw.select(
-            "key_a",
-            "key_b",
-            (1.0 - F.col("hamming") / F.lit(cfg.simhash_bits)).alias("score"),
-            "source",
-        )
-        edges = ckpt.materialize(
-            "edges", lsh_e.unionByName(sim_e).unionByName(exact_edges)
-        )
-        release_candidates(sim_raw)  # simhash's internal band cache
-        release_candidates(lsh_raw)  # verification's broadcast signature block
-        metrics.finish("edges", ckpt.path("edges"))
-
-    # --- stage: clusters (connected components, deterministic min-key id) ---
-    if ckpt.done("clusters"):
-        clusters = ckpt.load("clusters")
-    else:
-        metrics.start("clusters")
-        # lsh_star edges are hot-bucket clique approximations: kept for
-        # connectivity (dropping them would silently cut recall under
-        # skew), tracked under their own source so the approximation is
-        # auditable in the edges table.
-        strong = edges.filter(
-            (F.col("source") == "lsh") & (F.col("score") >= cfg.jaccard_threshold)
-            | F.col("source").isin("simhash", "exact", "lsh_star")
-        )
-        # labels broadcast while the corpus is below ~5M docs (~80MB of
-        # int64 pairs) — CC is a latency-bound chain of small jobs and the
-        # per-iteration shuffle dominates it; beyond that bound the join
-        # stays shuffled (see connected_components docstring).
-        cc = connected_components(
-            strong,
-            nodes=docs.select("doc_id"),
-            key_col="doc_id",
-            broadcast_labels_max=5_000_000 if n_docs < 5_000_000 else None,
-        )
-        clusters = cc.join(key_map, "doc_id").select("doc_key", "cluster_id")
-        clusters = ckpt.materialize("clusters", clusters)
-        release_candidates(cc)  # CC's final label checkpoint
-        metrics.finish("clusters", ckpt.path("clusters"))
-
-    # --- stage: suffix (exact substring pass within clusters) ---
-    if with_suffix_stage:
-        if ckpt.done("suffix"):
-            suffix = ckpt.load("suffix")
-        else:
-            metrics.start("suffix")
-            clustered_docs = docs.select(
-                "doc_key", F.col("sig_text").alias("content")
-            ).join(clusters, "doc_key")
-            suffix = suffix_edges(clustered_docs, cfg)
-            suffix = ckpt.materialize("suffix", suffix)
-            metrics.finish("suffix", ckpt.path("suffix"))
-    else:
         suffix = None
-
-    # --- summary ---
-    # The five summary aggregations are independent small jobs over
-    # already-checkpointed parquet — run them from a driver thread pool so
-    # later jobs back-fill the earlier ones' straggler tails (guide §2.6
-    # overlap of independent jobs; results are exact regardless of order).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _stats():
-        return dedup_stats(segments).collect()[0].asDict()
-
-    def _cstats():
-        # one job for both cluster statistics (count + multi-doc count)
-        return (
-            clusters.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .agg(
-                F.count(F.lit(1)).alias("n_clusters"),
-                F.sum(F.when(F.col("sz") > 1, 1).otherwise(0)).alias("n_multi"),
+        if with_suffix_stage:
+            # exact substring pass within clusters
+            suffix = stage(
+                "suffix",
+                lambda write: write(
+                    suffix_edges(suffix_docs(docs).join(clusters, "doc_key"), cfg)
+                ),
             )
-            .collect()[0]
-        )
-
-    def _pstats():
-        # candidate-pair stats: total + how many came from the hot-bucket
-        # star path — the star-edge approximation stays auditable from the
-        # summary alone (ADVICE r2)
-        return pairs.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("is_star").alias("n_star")
-        ).collect()[0]
-
-    def _by_source():
-        return {
-            r["source"]: r["n"]
-            for r in edges.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-
-    def _suffix_by_source():
-        # one groupBy("source") job gives both suffix summary counts
-        # (edges + overflows) instead of two filtered .count() scans
-        if suffix is None:
-            return None
-        return {
-            r["source"]: r["n"]
-            for r in suffix.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_stats = pool.submit(_stats)
-        f_cstats = pool.submit(_cstats)
-        f_pstats = pool.submit(_pstats)
-        f_by_source = pool.submit(_by_source)
-        f_sfx = pool.submit(_suffix_by_source)
-        stats = f_stats.result()
-        cstats = f_cstats.result()
-        pstats = f_pstats.result()
-        by_source = f_by_source.result()
-        suffix_by_source = f_sfx.result()
-    n_clusters, n_multi = cstats["n_clusters"], int(cstats["n_multi"] or 0)
-    n_star_kept = int(by_source.get("lsh_star", 0))
-    n_star_cand = int(pstats["n_star"] or 0)
-    if suffix_by_source is not None:
-        n_suffix_edges = int(suffix_by_source.get("suffix", 0))
-        n_suffix_overflows = int(suffix_by_source.get("suffix_overflow", 0))
-    else:
-        n_suffix_edges = n_suffix_overflows = None
-    from .lsh import retained_sideboard_dirs
-
-    retained = retained_sideboard_dirs()
-    metrics.add(
-        n_files=n_docs,
-        n_candidate_pairs=int(pstats["n"]),
-        n_star_candidates=n_star_cand,
-        n_star_edges_kept=n_star_kept,
-        n_star_edges_dropped=n_star_cand - n_star_kept,
-        n_edges=sum(by_source.values()),
-        n_edges_by_source=by_source,
-        n_clusters=n_clusters,
-        n_multi_doc_clusters=n_multi,
-        n_suffix_edges=n_suffix_edges,
-        n_suffix_overflows=n_suffix_overflows,
-        # non-local masters retain sideboard source dirs on driver disk
-        # until interpreter exit (lazy addFile fetch, see dedup/lsh.py);
-        # surfaced here so multi-run sessions see the accumulation.
-        n_retained_sideboard_dirs=len(retained),
-        retained_sideboard_bytes=sum(b for _, b in retained),
-        **stats,
-    )
-    metrics.write_summary()
-    docs_base.unpersist()
-    return metrics.summary
+        return summarize(metrics, n_docs, segments, clusters, pairs, edges, suffix)
+    finally:
+        cached.unpersist()
 
 
 def retention_manifest(clusters: DataFrame) -> DataFrame:

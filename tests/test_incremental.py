@@ -38,7 +38,9 @@ def test_incremental_equals_scratch(spark, tmp_path):
     summary = incremental_update(spark, full, inc_dir)
     assert summary["n_files"] == full.count()
     assert summary["n_new_files"] == full.count() - old.count() > 0
-    run_pipeline(spark, full, scratch_dir, resume=False)
+    scratch = run_pipeline(spark, full, scratch_dir, resume=False)
+    missing = set(scratch) - set(summary)
+    assert not missing, f"incremental summary lacks {sorted(missing)}"
     for stage in STAGES:
         assert _stage_rows(spark, inc_dir, stage) == _stage_rows(
             spark, scratch_dir, stage
@@ -84,6 +86,37 @@ def test_incremental_noop_and_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="incomplete"):
         incremental_update(spark, full, str(tmp_path / "never_ran"))
     shutil.rmtree(out, ignore_errors=True)
+
+
+def test_incremental_crash_leaves_tree_unmarked(spark, tmp_path, monkeypatch):
+    """A crash partway through an update (here: in the suffix stage, after
+    the per-doc stages were appended and the rest staged) leaves no stage
+    marked done, and a resumed run_pipeline over the grown corpus then
+    rebuilds a tree equal to a from-scratch run."""
+    from hyrise_generalized_dedup_spark.dedup import incremental
+
+    full, old = _split(spark, 300, 3, seed=7)
+    inc_dir, scratch_dir = str(tmp_path / "inc"), str(tmp_path / "scratch")
+    run_pipeline(spark, old, inc_dir, resume=False)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(incremental, "suffix_edges", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        incremental_update(spark, full, inc_dir)
+    ckpt = Checkpointer(spark, inc_dir, GDConfig())
+    marked = [stage for stage in STAGES if ckpt.done(stage)]
+    assert not marked, f"stages still marked done after the crash: {marked}"
+    monkeypatch.undo()
+    run_pipeline(spark, full, inc_dir, resume=True)
+    run_pipeline(spark, full, scratch_dir, resume=False)
+    for stage in STAGES:
+        assert _stage_rows(spark, inc_dir, stage) == _stage_rows(
+            spark, scratch_dir, stage
+        ), f"stage {stage} diverged after resuming a crashed update"
+    shutil.rmtree(inc_dir, ignore_errors=True)
+    shutil.rmtree(scratch_dir, ignore_errors=True)
 
 
 def test_incremental_with_removals_equals_scratch(spark, tmp_path):
