@@ -56,20 +56,25 @@ def _cosine_vec_udf():
         def _cos(av: pd.Series, bv: pd.Series) -> pd.Series:
             import numpy as np
 
-            if not len(av):
-                return pd.Series([], dtype="float64")
-            x = np.vstack(av.to_numpy()).astype(np.float64)
-            y = np.vstack(bv.to_numpy()).astype(np.float64)
-            n, d = x.shape
-            dot_ = np.zeros(n)
-            nx = np.zeros(n)
-            ny = np.zeros(n)
-            for i in range(d):  # left fold, same order as F.aggregate
-                dot_ = dot_ + x[:, i] * y[:, i]
-                nx = nx + x[:, i] * x[:, i]
-                ny = ny + y[:, i] * y[:, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return pd.Series(dot_ / (np.sqrt(nx) * np.sqrt(ny)))
+            # NULL or ragged pairs stay NaN (NULL on the way out), as the
+            # Catalyst fold gives NULL for them; the rest fold per length
+            la = np.array([-1 if v is None else len(v) for v in av])
+            lb = np.array([-2 if v is None else len(v) for v in bv])
+            out = np.full(len(av), np.nan)
+            for d in np.unique(la[la == lb]):
+                rows = np.flatnonzero((la == d) & (lb == d))
+                x = np.vstack(av.to_numpy()[rows]).astype(np.float64)
+                y = np.vstack(bv.to_numpy()[rows]).astype(np.float64)
+                dot_ = np.zeros(len(rows))
+                nx = np.zeros(len(rows))
+                ny = np.zeros(len(rows))
+                for i in range(d):  # left fold, same order as F.aggregate
+                    dot_ = dot_ + x[:, i] * y[:, i]
+                    nx = nx + x[:, i] * x[:, i]
+                    ny = ny + y[:, i] * y[:, i]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    out[rows] = dot_ / (np.sqrt(nx) * np.sqrt(ny))
+            return pd.Series(out)
 
         _COS_UDF = _cos
     return _COS_UDF

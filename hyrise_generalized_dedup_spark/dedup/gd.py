@@ -231,11 +231,14 @@ def base_table(segments: DataFrame) -> DataFrame:
 def dedup_stats(segments: DataFrame) -> DataFrame:
     """Corpus-level dedup metrics (memory-accounting analog:
     AbstractSegment::memory_usage / MemoryUsageCalculationMode,
-    src/lib/types.hpp:231)."""
+    src/lib/types.hpp:231). ``dedup_ratio`` is NULL when there are no
+    segments, as DuckDB's ``x / 0`` is."""
     return segments.agg(
         F.count(F.lit(1)).alias("total_segments"),
         F.countDistinct("base_fp").alias("distinct_bases"),
         F.sum(F.col("seg_len").cast("long")).alias("total_bytes"),
         F.sum(F.length("deviation").cast("long")).alias("deviation_bytes"),
-        (F.lit(1.0) - F.countDistinct("base_fp") / F.count(F.lit(1))).alias("dedup_ratio"),
+        (F.lit(1.0) - F.try_divide(F.countDistinct("base_fp"), F.count(F.lit(1)))).alias(
+            "dedup_ratio"
+        ),
     )

@@ -12,8 +12,6 @@ from .fingerprint import fingerprint_table
 from .pack import pack_shard_oracle_sql
 from .multimodal import (
     decode_media_features,
-    thumbnail_features,
-    extract_features,
     media_table_from_documents,
     media_table_with_codecs,
 )
@@ -405,99 +403,6 @@ def decontaminate_table(docs: DataFrame, n: int = 5) -> DataFrame:
 
 
 @_register(
-    "curation_manifest",
-    """
-    WITH base AS (
-      SELECT doc_id, text,
-             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                  ELSE regexp_split_to_array(trim(text), '\\s+') END AS w
-      FROM documents
-    ), quality AS (
-      SELECT doc_id,
-        CASE WHEN len(w) = 0 THEN 0.0
-             ELSE CAST(list_sum(list_transform(w, t -> length(t))) AS DOUBLE) / len(w)
-        END AS mwl,
-        CASE WHEN len(w) = 0 THEN 0.0
-             ELSE CAST(len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]'))) AS DOUBLE) / len(w)
-        END AS awr
-      FROM base
-    ), canon AS (
-      SELECT doc_id, MIN(doc_id) OVER (PARTITION BY sha256(text)) AS canonical_id
-      FROM documents
-    ), grams AS (
-      SELECT doc_id, doc_id % 20 = 0 AS is_eval,
-             CASE WHEN len(w) < 5 THEN []::VARCHAR[]
-                  ELSE list_distinct(list_transform(generate_series(1, len(w) - 4),
-                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' '
-                              || w[i+3] || ' ' || w[i+4])) END AS g
-      FROM base
-    ), ev AS (
-      SELECT DISTINCT unnest(g) AS gram FROM grams WHERE is_eval
-    ), hits AS (
-      SELECT tg.doc_id, count(*) AS n_hit
-      FROM (SELECT doc_id, unnest(g) AS gram FROM grams WHERE NOT is_eval) tg
-      JOIN ev USING (gram) GROUP BY tg.doc_id
-    )
-    SELECT q.doc_id,
-      CAST(CASE WHEN c.canonical_id <> q.doc_id THEN 1 ELSE 0 END AS INTEGER) AS drop_dup,
-      CAST(CASE WHEN q.mwl < 2.0 OR q.mwl > 12.0 OR q.awr < 0.5 THEN 1 ELSE 0 END AS INTEGER) AS drop_quality,
-      CAST(CASE WHEN coalesce(h.n_hit, 0) > 0 AND q.doc_id % 20 <> 0 THEN 1 ELSE 0 END AS INTEGER) AS drop_contaminated,
-      CAST(CASE WHEN c.canonical_id = q.doc_id
-                 AND NOT (q.mwl < 2.0 OR q.mwl > 12.0 OR q.awr < 0.5)
-                 AND NOT (coalesce(h.n_hit, 0) > 0 AND q.doc_id % 20 <> 0)
-            THEN 1 ELSE 0 END AS INTEGER) AS keep
-    FROM quality q
-    JOIN canon c ON c.doc_id = q.doc_id
-    LEFT JOIN hits h ON h.doc_id = q.doc_id
-    """,
-)
-def curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation decision per document — the manifest a
-    training-data pipeline actually consumes: drop exact duplicates
-    (keep the min-id canonical per content sha), drop quality failures
-    (Gopher mean-word-length/alpha-word bounds), drop eval-contaminated
-    docs (word-5-gram overlap), keep the rest. Composes three
-    independently oracled signals into one row per doc with per-reason
-    flags (auditable: a doc can fail several ways). Scale shape: sha
-    census is a groupBy+join-back (no window over the corpus in the
-    Spark plan), quality is scan-stage map work, decontam probes a
-    broadcast eval-gram set — content never shuffles except the sha
-    census's 32-byte digests."""
-    docs = load_table(spark, sf_dir, "documents")
-    quality = docs.select(
-        "doc_id",
-        T.mean_word_length(F.col("text")).alias("mwl"),
-        T.alpha_word_ratio(F.col("text")).alias("awr"),
-    )
-    sha = docs.select("doc_id", F.sha2("text", 256).alias("sha"))
-    canon = sha.join(
-        sha.groupBy("sha").agg(F.min("doc_id").alias("canonical_id")), "sha"
-    ).select("doc_id", "canonical_id")
-    decon = decontaminate_table(
-        docs.withColumn("is_eval", F.col("doc_id") % 20 == 0)
-    ).select("doc_id", "n_hit_grams", "is_eval")
-    bad_q = (F.col("mwl") < 2.0) | (F.col("mwl") > 12.0) | (F.col("awr") < 0.5)
-    contaminated = (F.col("n_hit_grams") > 0) & (F.col("is_eval") == 0)
-    return (
-        quality.join(canon, "doc_id")
-        .join(decon, "doc_id", "left")
-        .select(
-            "doc_id",
-            (F.col("canonical_id") != F.col("doc_id")).cast("int").alias("drop_dup"),
-            bad_q.cast("int").alias("drop_quality"),
-            contaminated.cast("int").alias("drop_contaminated"),
-            (
-                (F.col("canonical_id") == F.col("doc_id"))
-                & ~bad_q
-                & ~contaminated
-            )
-            .cast("int")
-            .alias("keep"),
-        )
-    )
-
-
-@_register(
     "mm_media_stats",
     """
     SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
@@ -595,15 +500,6 @@ def mm_decoded_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("sample_rate").cast("double")
         ).alias("duration_ms"),
     )
-
-
-@_register("mm_features", None)  # stubbed decoder features -> rows-only
-def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads (decode step
-    stubbed per environment; batch shape/schema real)."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = extract_features(media_table_from_documents(docs))
-    return feats.select("media_id", "modality", "n_bytes", "feat_dim", "feat_norm")
 
 
 @_register(
@@ -981,247 +877,6 @@ TEXT_ORACLES["code_clone_census"] = TEXT_ORACLES["code_clone_census"].replace(
 
 
 @_register(
-    "code_curation_manifest",
-    """
-    WITH lines AS (
-      SELECT doc_id, text, string_split(text, chr(10)) AS ls FROM documents
-    ), q AS (
-      SELECT doc_id,
-        CAST(coalesce(list_max(list_transform(ls, x -> length(x))), 0) AS BIGINT) AS maxl,
-        CASE WHEN len(ls) = 0 THEN 0.0
-             ELSE list_sum(list_transform(ls, x -> length(x))) / CAST(len(ls) AS DOUBLE) END AS avgl,
-        CASE WHEN length(text) = 0 THEN 0.0
-             ELSE (length(text) - length(regexp_replace(text, '[A-Za-z0-9]', '', 'g')))
-                  / CAST(length(text) AS DOUBLE) END AS alnum,
-        CASE WHEN regexp_matches(array_to_string(ls[1:5], chr(10)),
-               '(?i)auto[- ]?generated|automatically generated|do not edit|generated by')
-             THEN 1 ELSE 0 END AS autogen,
-        CASE WHEN text LIKE '<?xml%' THEN 1 ELSE 0 END AS xml
-      FROM lines
-    ), fmt AS (
-      SELECT doc_id,
-             MIN(doc_id) OVER (PARTITION BY sha256(trim(regexp_replace(
-               regexp_replace(text, '(?m)(^|[^:])(//|#|--).*$', '\\1', 'g'),
-               '[ \t\r\n]+', ' ', 'g')))) AS fmt_canonical
-      FROM documents
-    ), cl AS (
-      SELECT doc_id,
-             MIN(doc_id) OVER (PARTITION BY sha256({NORM})) AS clone_canonical
-      FROM documents
-    ), pii AS (
-      SELECT doc_id,
-        CASE WHEN
-          len(regexp_extract_all(text,
-            '[A-Za-z0-9._%+-]+@[A-Za-z0-9-]+(\\.[A-Za-z0-9-]+)*\\.[A-Za-z]{2,}'))
-          + len(regexp_extract_all(text, '\\b[0-9]{1,3}(\\.[0-9]{1,3}){3}\\b'))
-          + len(regexp_extract_all(text, '\\bAKIA[0-9A-Z]{16}\\b'))
-          + len(regexp_extract_all(text, '-----BEGIN [A-Z ]*PRIVATE KEY-----'))
-          + len(regexp_extract_all(text,
-              '(?i)(api[_-]?key|secret|token|passwd|password)[ '
-              || chr(9) || ']*[:=][ ' || chr(9) || ']*["''][^"'']{8,}["'']'))
-          > 0 THEN 1 ELSE 0 END AS has_pii
-      FROM documents
-    ), lic AS (
-      -- mirror license_id exactly: the FIRST SPDX tag wins (a later
-      -- second tag must not override it), phrases only when no tag
-      SELECT doc_id,
-        CASE WHEN coalesce(regexp_extract(
-               lower(array_to_string((string_split(text, chr(10)))[1:20], chr(10))),
-               'spdx-license-identifier:[ \\t]*([a-z0-9.+-]+)', 1), '') <> ''
-             THEN CASE WHEN regexp_matches(regexp_extract(
-                    lower(array_to_string((string_split(text, chr(10)))[1:20], chr(10))),
-                    'spdx-license-identifier:[ \\t]*([a-z0-9.+-]+)', 1),
-                    '^(agpl|gpl|lgpl|mpl|cc-by-sa|epl|cecill)')
-                  THEN 1 ELSE 0 END
-             WHEN regexp_matches(
-               lower(array_to_string((string_split(text, chr(10)))[1:20], chr(10))),
-               'gnu affero general public license|gnu (lesser|library) general public license|gnu general public license|mozilla public license')
-             THEN 1 ELSE 0 END AS copyleft
-      FROM documents
-    )
-    SELECT q.doc_id,
-      CAST(CASE WHEN f.fmt_canonical <> q.doc_id THEN 1 ELSE 0 END AS INTEGER)
-        AS drop_format_dup,
-      CAST(CASE WHEN c.clone_canonical <> q.doc_id THEN 1 ELSE 0 END AS INTEGER)
-        AS drop_clone_dup,
-      CAST(CASE WHEN q.maxl > 1000 OR q.avgl > 100 OR q.alnum < 0.25
-                 OR q.autogen = 1 OR q.xml = 1 THEN 1 ELSE 0 END AS INTEGER)
-        AS drop_quality,
-      CAST(li.copyleft AS INTEGER) AS drop_license,
-      CAST(CASE WHEN p.has_pii = 1 AND c.clone_canonical = q.doc_id
-                 AND li.copyleft = 0
-                 AND NOT (q.maxl > 1000 OR q.avgl > 100 OR q.alnum < 0.25
-                          OR q.autogen = 1 OR q.xml = 1)
-            THEN 1 ELSE 0 END AS INTEGER) AS needs_redaction,
-      CAST(CASE WHEN f.fmt_canonical = q.doc_id AND c.clone_canonical = q.doc_id
-                 AND li.copyleft = 0
-                 AND NOT (q.maxl > 1000 OR q.avgl > 100 OR q.alnum < 0.25
-                          OR q.autogen = 1 OR q.xml = 1)
-            THEN 1 ELSE 0 END AS INTEGER) AS keep
-    FROM q
-    JOIN fmt f ON f.doc_id = q.doc_id
-    JOIN cl c ON c.doc_id = q.doc_id
-    JOIN pii p ON p.doc_id = q.doc_id
-    JOIN lic li ON li.doc_id = q.doc_id
-    """,
-)
-def code_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-file decision a CODE-corpus pipeline consumes (The Stack's
-    release recipe shape): drop non-canonical formatting duplicates and
-    type-2 clones (min-doc_id election per canonical form), drop Stack
-    quality failures, flag survivors that need PII redaction before
-    release, keep the rest. A copyleft license (AGPL/GPL/LGPL/MPL, by
-    SPDX tag or header phrase) is its own drop reason — the policy
-    public code corpora apply before any content pass; the stricter
-    permissive-only policy is available as code_license_census's
-    license_keep. Composes five independently oracled code signals with
-    per-reason flags. Scale shape: both censuses are groupBy+join-back
-    on 64-hex keys in the Spark plan (the window in the oracle is
-    DuckDB shorthand); everything else is scan-stage map work —
-    content never shuffles."""
-    docs = load_table(spark, sf_dir, "documents")
-    c = F.col("text")
-    sigs = docs.select(
-        "doc_id",
-        C.normalized_sha(c).alias("fmt_sha"),
-        C.clone_sha(c).alias("cl_sha"),
-        C.stack_keep(c).alias("quality_ok"),
-        (
-            C.email_count(c)
-            + C.ipv4_count(c)
-            + C.aws_key_count(c)
-            + C.private_key_count(c)
-            + C.secret_assign_count(c)
-            > 0
-        ).cast("int").alias("has_pii"),
-        C.is_copyleft(C.license_id(c)).alias("copyleft"),
-    )
-    fmt_canon = sigs.groupBy("fmt_sha").agg(F.min("doc_id").alias("fmt_canonical"))
-    cl_canon = sigs.groupBy("cl_sha").agg(F.min("doc_id").alias("clone_canonical"))
-    j = sigs.join(fmt_canon, "fmt_sha").join(cl_canon, "cl_sha")
-    is_fmt_canon = F.col("fmt_canonical") == F.col("doc_id")
-    is_cl_canon = F.col("clone_canonical") == F.col("doc_id")
-    quality_ok = F.col("quality_ok") == 1
-    lic_ok = F.col("copyleft") == 0
-    return j.select(
-        "doc_id",
-        (~is_fmt_canon).cast("int").alias("drop_format_dup"),
-        (~is_cl_canon).cast("int").alias("drop_clone_dup"),
-        (~quality_ok).cast("int").alias("drop_quality"),
-        F.col("copyleft").alias("drop_license"),
-        ((F.col("has_pii") == 1) & is_cl_canon & quality_ok & lic_ok)
-        .cast("int")
-        .alias("needs_redaction"),
-        (is_fmt_canon & is_cl_canon & quality_ok & lic_ok)
-        .cast("int")
-        .alias("keep"),
-    )
-
-
-TEXT_ORACLES["code_curation_manifest"] = TEXT_ORACLES["code_curation_manifest"].replace(
-    "{NORM}", _clone_norm_sql()
-)
-
-
-@_register(
-    "code_block_clones",
-    """
-    WITH blocks AS (
-      SELECT doc_id,
-             trim(unnest(regexp_split_to_array(
-               regexp_replace(text, '(?m)^(def |class |function )',
-                              chr(2) || '\\1', 'g'),
-               chr(2)))) AS block
-      FROM documents
-    ), normed AS (
-      SELECT doc_id, sha256({NORM}) AS block_sha, {NORM} AS norm
-      FROM blocks
-    ), nonempty AS (
-      SELECT doc_id, block_sha FROM normed WHERE length(norm) > 0
-    )
-    SELECT block_sha,
-           CAST(COUNT(*) AS BIGINT) AS n_copies,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(MIN(doc_id) AS BIGINT) AS canonical_doc_id
-    FROM nonempty GROUP BY block_sha
-    """,
-)
-def code_block_clones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Function-block clone census: split each file at top-level
-    definition openers (functions/code.split_code_blocks), type-2
-    normalize every block, census the canonical shas — finds "this
-    function, copy-pasted (and possibly renamed) into other files",
-    which whole-file dedup structurally cannot. Scale shape: the split
-    + explode is map-side (blocks never outnumber lines), the census is
-    one partial-agg groupBy on a 64-hex key; comment-only blocks
-    normalize to empty and are dropped before the shuffle."""
-    docs = load_table(spark, sf_dir, "documents")
-    blocks = docs.select(
-        "doc_id",
-        F.explode(C.split_code_blocks(F.col("text"))).alias("block"),
-    ).withColumn("block", F.trim(F.col("block")))
-    normed = blocks.select(
-        "doc_id", C.normalize_tokens(F.col("block")).alias("norm")
-    ).filter(F.length("norm") > 0)
-    return (
-        normed.select("doc_id", F.sha2("norm", 256).alias("block_sha"))
-        .groupBy("block_sha")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.min("doc_id").alias("canonical_doc_id"),
-        )
-    )
-
-
-_BLOCK_NORM_SQL = _clone_norm_sql().replace("text,", "block,", 1)
-TEXT_ORACLES["code_block_clones"] = (
-    TEXT_ORACLES["code_block_clones"].replace("{NORM}", _BLOCK_NORM_SQL)
-)
-
-
-@_register(
-    "events_json_profile",
-    """
-    WITH x AS (
-      SELECT event_type,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-      FROM events
-    )
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(MIN(k) AS BIGINT) AS k_min,
-           CAST(MAX(k) AS BIGINT) AS k_max,
-           CAST(SUM(k) AS BIGINT) AS k_sum,
-           CAST(SUM(CASE WHEN k > 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_k_high
-    FROM x GROUP BY event_type
-    """,
-)
-def events_json_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured column extraction — the data-lake staple the
-    relational tranches don't cover: pull a typed field out of the JSON
-    `props` string (Spark get_json_object -> JVM Jackson path eval; the
-    oracle restates it with DuckDB's json_extract_string) and aggregate
-    per event type. Scan-stage map work + one partial-agg groupBy;
-    the JSON never shuffles, only the extracted int."""
-    events = load_table(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        events.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("k").alias("k_min"),
-            F.max("k").alias("k_max"),
-            F.sum("k").alias("k_sum"),
-            F.sum(F.when(F.col("k") > 50, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_k_high"),
-        )
-    )
-
-
-@_register(
     "code_license_census",
     """
     WITH heads AS (
@@ -1287,51 +942,6 @@ def code_license_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "license",
         C.is_copyleft(F.col("license")).alias("is_copyleft"),
         C.license_keep(F.col("license")).alias("license_keep"),
-    )
-
-
-@_register(
-    "code_import_census",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(
-               regexp_extract_all(text,
-                 '(?:^|\\n)[ \\t]*import[ \\t]+([A-Za-z_][A-Za-z0-9_.]*)', 1)
-               || regexp_extract_all(text,
-                 '(?:^|\\n)[ \\t]*from[ \\t]+([A-Za-z_][A-Za-z0-9_.]*)[ \\t]+import', 1)
-               || regexp_extract_all(text,
-                 'require\\([''"]([A-Za-z0-9_@./-]+)[''"]\\)', 1)
-               || regexp_extract_all(text,
-                 '(?:^|\\n)[ \\t]*#[ \\t]*include[ \\t]*[<"]([A-Za-z0-9_./]+)[>"]', 1)
-             ) AS targets
-      FROM documents
-    ), roots AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(targets,
-               x -> string_split_regex(x, '[./]')[1]))) AS module
-      FROM t
-    )
-    SELECT module, CAST(COUNT(*) AS BIGINT) AS n_files
-    FROM roots GROUP BY module
-    """,
-)
-def code_import_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus dependency census: per top-level imported module, how many
-    files reference it (functions/code.py import_roots — python/java
-    `import`, python `from … import`, node `require`, C `#include`,
-    deduped per file). Scan-stage regex extraction, one explode of SHORT
-    module names (content never shuffles), one partial-agg groupBy — at
-    10^12 files the shuffle carries one ~10-byte row per (file, module).
-    Driver text yields rows only where a line happens to open with an
-    import keyword — determinism is what the slot checks; extraction
-    semantics are pytest-oracled on a synthetic multi-language corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    roots = docs.select(
-        F.explode(C.import_roots(F.col("text"))).alias("module")
-    )
-    return roots.groupBy("module").agg(
-        F.count(F.lit(1)).cast("long").alias("n_files")
     )
 
 
@@ -1435,152 +1045,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_batch(load_table(spark, sf_dir, "events"))
 
 
-# Per-source mixture rates for the stratified-sampling gate: the kind of
-# corpus-weighting table a training-data pipeline carries (web-crawl text
-# downsampled, curated sources kept whole). Rates quantize to /256 via
-# two sha256 hex digits so BOTH engines compute the identical bucket.
-MIXTURE_RATES: dict[str, float] = {
-    "src0": 1.0,     # curated: keep whole
-    "src1": 0.75,
-    "src2": 0.5,
-    "src3": 0.25,    # bulk crawl: heavy downsample
-}
-_DEFAULT_RATE = 0.125
-
-
-def _mixture_threshold(rate: float) -> int:
-    return int(round(rate * 256))
-
-
-@_register(
-    "corpus_sample_stratified",
-    f"""
-    WITH h AS (
-      SELECT doc_id, source,
-             (strpos('0123456789abcdef',
-                     substr(sha256(CAST(doc_id AS VARCHAR)), 63, 1)) - 1) * 16
-             + (strpos('0123456789abcdef',
-                       substr(sha256(CAST(doc_id AS VARCHAR)), 64, 1)) - 1)
-               AS bucket
-      FROM documents
-    ), gated AS (
-      SELECT doc_id, source, bucket,
-             CASE {' '.join(f"WHEN source = '{s}' THEN {_mixture_threshold(r)}"
-                            for s, r in MIXTURE_RATES.items())}
-                  ELSE {_mixture_threshold(_DEFAULT_RATE)} END AS thr
-      FROM h
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(SUM(CASE WHEN bucket < thr THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_kept,
-           CAST(SUM(CASE WHEN bucket < thr THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) AS kept_frac
-    FROM gated GROUP BY source
-    """,
-)
-def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling for corpus mixture weighting:
-    each doc hashes to one of 256 buckets via two sha256 hex digits of
-    its id (content-independent, seedless, REPRODUCIBLE across engines,
-    runs, and partitionings — rand()-based sampling is none of those),
-    and a per-source rate table gates bucket < rate*256. The census
-    reports per-source keep fractions; the keep predicate itself is the
-    reusable primitive (scan-stage map work, no shuffle — the census
-    groupBy here is just the observable summary). Rates quantize to
-    1/256 — documented, not silent."""
-    docs = load_table(spark, sf_dir, "documents")
-    hexd = "0123456789abcdef"
-    sha = F.sha2(F.col("doc_id").cast("string"), 256)
-    bucket = (
-        (F.instr(F.lit(hexd), F.substring(sha, 63, 1)) - 1) * 16
-        + (F.instr(F.lit(hexd), F.substring(sha, 64, 1)) - 1)
-    )
-    thr = F.lit(_mixture_threshold(_DEFAULT_RATE))
-    for s, r in reversed(MIXTURE_RATES.items()):
-        thr = F.when(F.col("source") == s, F.lit(_mixture_threshold(r))).otherwise(thr)
-    gated = docs.select(
-        "source", bucket.alias("bucket"), thr.alias("thr")
-    )
-    kept = F.when(F.col("bucket") < F.col("thr"), 1).otherwise(0)
-    return gated.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.sum(kept).cast("long").alias("n_kept"),
-        (F.sum(kept).cast("double") / F.count(F.lit(1)).cast("double")).alias(
-            "kept_frac"
-        ),
-    )
-
-
-SEQ_LEN = 2048  # target training-sequence token budget
-
-
-@_register(
-    "corpus_pack_sequences",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, source,
-             CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                  END AS BIGINT) AS n_tokens
-      FROM documents
-    ), packed AS (
-      SELECT doc_id, source, n_tokens,
-             CAST(floor((SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens) / CAST({SEQ_LEN} AS DOUBLE)) AS BIGINT) AS seq_id
-      FROM toks
-    )
-    SELECT source, seq_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           CAST(MIN(doc_id) AS BIGINT) AS first_doc,
-           CAST(MAX(doc_id) AS BIGINT) AS last_doc
-    FROM packed GROUP BY source, seq_id
-    """,
-)
-def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training-sequence packing: docs stream in doc_id
-    order within each source, a running token total assigns each doc to
-    sequence floor(prior_cum / SEQ_LEN) — the boundary-crossing doc
-    belongs to the sequence it STARTS in (documents straddle sequence
-    boundaries in real packing; the census reports per-sequence token
-    loads so overshoot is visible, not hidden). Partitioning by source
-    keeps the cumulative window parallel (one window per source, not one
-    global single-partition sort — the two-level shape real packing jobs
-    use); census output is one row per packed sequence."""
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql.window import Window
-
-    toks = docs.select(
-        "doc_id",
-        "source",
-        T.token_count(F.col("text")).cast("long").alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = toks.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.floor(
-            (F.sum("n_tokens").over(w) - F.col("n_tokens"))
-            / F.lit(SEQ_LEN).cast("double")
-        )
-        .cast("long")
-        .alias("seq_id"),
-    )
-    return packed.groupBy("source", "seq_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.min("doc_id").cast("long").alias("first_doc"),
-        F.max("doc_id").cast("long").alias("last_doc"),
-    )
-
-
 @_register("text_decontaminate_bloom", None)  # approximate by design (Bloom
 # upper bound on hits) -> rows-only driver check; the no-false-negative and
 # FP-rate contracts are pytest-gated against the exact path in
@@ -1651,27 +1115,6 @@ def _line_body(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "code_line_census",
-    _LINE_BODY_CTE
-    + """
-    SELECT l.key AS key,
-           CAST(count(DISTINCT l.doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_occurrences
-    FROM l JOIN common c ON l.key = c.key
-    GROUP BY l.key
-    """,
-)
-def code_line_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus boilerplate-line census (functions/lines.py): trimmed lines
-    appearing in >= 5 distinct documents, with doc/occurrence counts.
-    Output is census-bounded (<= total_lines/5 rows), so the result stays
-    collectable at any corpus size."""
-    from .lines import line_census
-
-    return line_census(_line_body(spark, sf_dir), min_docs=5, text_col="body")
-
-
-@_register(
     "code_line_dedup",
     _LINE_BODY_CTE
     + """
@@ -1696,89 +1139,6 @@ def code_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lines import strip_common_lines
 
     return strip_common_lines(_line_body(spark, sf_dir), min_docs=5, text_col="body")
-
-
-@_register(
-    "text_vocab_census",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS token
-      FROM documents
-    )
-    SELECT token,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_occurrences
-    FROM t GROUP BY token
-    """,
-)
-def text_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary census (functions/vocab.py) — the word-frequency
-    table a tokenizer trainer starts from. Map-side token explode + one
-    partial-agg groupBy; output is vocabulary-bounded at any corpus
-    size."""
-    from .vocab import vocab_census
-
-    return vocab_census(load_table(spark, sf_dir, "documents"))
-
-
-@_register(
-    "bpe_pair_stats",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[a-z0-9_]+')) AS token
-      FROM documents
-    ), v AS (
-      SELECT token, count(*) AS n_occ FROM t GROUP BY token
-    ), p AS (
-      SELECT n_occ,
-             UNNEST(list_transform(range(1, length(token)),
-                    i -> substr(token, CAST(i AS INTEGER), 2))) AS pair
-      FROM v WHERE length(token) >= 2
-    )
-    SELECT pair,
-           CAST(sum(n_occ) AS BIGINT) AS n_occurrences,
-           CAST(count(*) AS BIGINT) AS n_token_forms
-    FROM p GROUP BY pair
-    """,
-)
-def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge-iteration-#1 candidate table (functions/vocab.py):
-    adjacent character-pair frequencies weighted by word occurrences,
-    computed over the distinct-token census so the pair explode touches
-    vocabulary-sized data only."""
-    from .vocab import bpe_pair_stats
-
-    return bpe_pair_stats(load_table(spark, sf_dir, "documents"))
-
-
-@_register(
-    "corpus_shuffle",
-    """
-    WITH h AS (
-      SELECT doc_id,
-             sha256('shuf:' || CAST(doc_id AS VARCHAR)) AS shuf_key,
-             CAST((strpos('0123456789abcdef',
-                          substr(sha256('shuf:' || CAST(doc_id AS VARCHAR)),
-                                 1, 1)) - 1) % 16 AS BIGINT) AS bucket
-      FROM documents
-    )
-    SELECT doc_id, bucket,
-           CAST(row_number() OVER (PARTITION BY bucket
-                                   ORDER BY shuf_key, doc_id) AS BIGINT)
-             AS rank_in_bucket
-    FROM h
-    """,
-)
-def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global corpus shuffle (functions/shuffle.py): seeded
-    sha256 permutation split into 16 hash buckets with per-bucket ranks —
-    reproducible training order with no global sort; one bucket-keyed
-    exchange + per-bucket window."""
-    from .shuffle import shuffle_order
-
-    return shuffle_order(load_table(spark, sf_dir, "documents"))
 
 
 @_register(
@@ -1898,44 +1258,6 @@ def code_file_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "mm_thumbnails",
-    """
-    WITH m AS (
-      SELECT doc_id,
-             CAST(4 + doc_id % 13 AS INTEGER) AS w,
-             CAST(3 + doc_id % 7 AS INTEGER) AS h
-      FROM documents WHERE doc_id % 3 = 0
-    ), t AS (
-      SELECT m.doc_id,
-             (m.doc_id
-              + 7 * CAST(floor(CAST(y.g * m.h AS DOUBLE)
-                               / CAST(3 AS DOUBLE)) AS BIGINT)
-              + CAST(floor(CAST(x.g * m.w AS DOUBLE)
-                           / CAST(4 AS DOUBLE)) AS BIGINT)) % 256 AS v,
-             y.g AS gy, x.g AS gx
-      FROM m, generate_series(0, 2) y(g), generate_series(0, 3) x(g)
-    )
-    SELECT doc_id AS media_id,
-           CAST(4 AS INTEGER) AS thumb_w,
-           CAST(3 AS INTEGER) AS thumb_h,
-           CAST(SUM(v) AS BIGINT) AS thumb_sum,
-           CAST(MAX(CASE WHEN gy = 0 AND gx = 0 THEN v END) AS INTEGER)
-             AS thumb_head
-    FROM t GROUP BY doc_id
-    """,
-)
-def mm_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize over the real decode path: synth PNGs decode
-    (zlib inflate + unfilter), resize nearest-neighbor to 4x3, and the
-    oracle recomputes every thumbnail pixel from the fixture's
-    closed-form pixel(x, y) = (doc_id + 7y + x) % 256 with the same
-    floor index mapping — a decode or index-math bug shifts the checksum
-    and fails the hash (functions/multimodal.thumbnail_features)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return thumbnail_features(media_table_with_codecs(docs))
-
-
 from .split import (  # noqa: E402  (registered after the md5 helpers exist)
     split_bucket,
     split_bucket_oracle_sql,
@@ -2017,41 +1339,6 @@ def text_heavy_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         "line",
         "n",
     )
-
-
-@_register(
-    "text_heavy_lines_weighted",
-    _LINE_BODY_CTE
-    + """
-    , wcounts AS (
-      SELECT key AS line, CAST(SUM(length(key)) AS BIGINT) AS n
-      FROM l WHERE length(key) > 0 GROUP BY key
-    ), wranked AS (
-      SELECT CAST(row_number() OVER (ORDER BY n DESC, line) AS BIGINT)
-               AS rank,
-             line, n
-      FROM wcounts
-    )
-    SELECT rank, line, n FROM wranked WHERE rank <= 20 ORDER BY rank
-    """,
-)
-def text_heavy_lines_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-weighted twin of text_heavy_lines: each occurrence contributes
-    its byte length, so the ranking reflects corpus COST (a long template
-    repeated a few times outranks a short line repeated often) — the
-    weighted heavy-hitters mode (functions/heavy.py weight_col) against a
-    full-GROUP-BY SUM(length) DuckDB oracle. Full-registry slot
-    (pytest-oracled; the driver's 50 slots carry the unweighted twin)."""
-    from .heavy import heavy_hitters
-
-    lines = (
-        _line_body(spark, sf_dir)
-        .select(F.explode(F.split("body", "\n")).alias("raw"))
-        .select(F.trim("raw").alias("line"))
-        .filter(F.length("line") > 0)
-        .withColumn("w", F.length("line").cast("long"))
-    )
-    return heavy_hitters(lines, "line", k=20, capacity=4096, weight_col="w")
 
 
 @_register(
@@ -2369,15 +1656,6 @@ def text_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Mixture-plan gate parameters: a non-uniform whitelist mixture over the
-# driver corpus's 20 sources and a budget that oversamples the 0.1-weight
-# sources (~2.4 epochs) while undersampling the rest — both branches of
-# the repeat/epoch math exercised.
-_MIX_BUDGET = 30_000
-_MIX_WEIGHTS = {f"src{i}": (0.1 if i < 4 else 0.0375) for i in range(20)}
-_MIX_VALUES_SQL = ", ".join(
-    f"('{s}', CAST({w!r} AS DOUBLE))" for s, w in sorted(_MIX_WEIGHTS.items())
-)
 # Discrete quality score for the prune gate: token count bucketed to 0-5.
 _QSCORE_SQL = (
     "CAST(LEAST(5, CAST(floor(COALESCE(CASE WHEN length(trim(text)) = 0 "
@@ -2385,39 +1663,6 @@ _QSCORE_SQL = (
     "/ 20.0) AS BIGINT)) AS BIGINT)"
 )
 _PRUNE_KEEP_FRAC = 0.4
-
-
-@_register(
-    "corpus_mixture_plan",
-    f"""
-    WITH w(source, weight) AS (VALUES {_MIX_VALUES_SQL}),
-    s AS (
-      SELECT source, COUNT(*) AS n_docs,
-             SUM(CAST(COALESCE(CASE WHEN length(trim(text)) = 0 THEN 0
-                 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END, 0)
-                 AS BIGINT)) AS n_tokens
-      FROM documents GROUP BY source
-    )
-    SELECT s.source, s.n_docs, CAST(s.n_tokens AS BIGINT) AS n_tokens, w.weight,
-           CAST(floor(w.weight * {float(_MIX_BUDGET)!r}) AS BIGINT) AS target_tokens,
-           CAST(floor(w.weight * {float(_MIX_BUDGET)!r}) AS BIGINT) / s.n_tokens
-             AS repeat_factor,
-           CAST(ceil(CAST(floor(w.weight * {float(_MIX_BUDGET)!r}) AS BIGINT)
-                     / s.n_tokens) AS BIGINT) AS epochs,
-           (CAST(floor(w.weight * {float(_MIX_BUDGET)!r}) AS BIGINT)
-             / s.n_tokens) > 1.0 AS oversampled
-    FROM s JOIN w ON s.source = w.source
-    """,
-)
-def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static mixture table (functions/mixture.py mixture_plan): per-source
-    token census + broadcast weight join -> repeat factors and epoch
-    counts for a global token budget. One partial-agg groupBy over the
-    corpus; arithmetic is IEEE-double so DuckDB recomputes it bit-exact."""
-    from .mixture import mixture_plan
-
-    docs = load_table(spark, sf_dir, "documents")
-    return mixture_plan(docs, _MIX_WEIGHTS, _MIX_BUDGET)
 
 
 @_register(
@@ -2462,36 +1707,6 @@ def text_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return quality_prune(docs, score, _PRUNE_KEEP_FRAC).drop("source")
-
-
-@_register(
-    "pack_contexts",
-    # The serving step: the walk joins content and string_agg rebuilds
-    # each pack's training example in doc_id order; sha256 makes the
-    # comparison content-exact without shipping the text.
-    _PACK_WALK_CTE
-    + """
-    SELECT w.pack_shard, w.pack_id,
-           COUNT(*) AS n_docs,
-           CAST(SUM(w.pack_n_tokens) AS BIGINT) AS fill_tokens,
-           sha256(string_agg(COALESCE(d.text, ''), chr(10) || chr(10)
-                             ORDER BY w.doc_id)) AS context_sha
-    FROM walk w JOIN documents d ON d.doc_id = w.doc_id
-    GROUP BY w.pack_shard, w.pack_id
-    """,
-)
-def pack_contexts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized packed training contexts (functions/pack.py
-    pack_contexts): greedy assignment over projected (doc_id, n_tokens)
-    pairs, content joined back and concatenated JVM-side (collect_list
-    + array_sort + array_join — per-group memory capacity-bounded);
-    sha256 of each context bit-checks the full serving transform."""
-    from .pack import pack_contexts
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_contexts(
-        docs, capacity=_PACK_CAPACITY, n_shards=_PACK_SHARDS
-    )
 
 
 @_register(
@@ -2709,22 +1924,6 @@ def code_repo_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repo_content_census(files)
 
 
-@_register("text_bpe_tokens", None)
-def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full BPE tokenizer over the corpus (functions/bpe.py): merge
-    table trained on the capped vocabulary census (the only collect,
-    max_vocab rows), applied distributed via an Arrow mapInPandas
-    encoder with a per-batch word memo. Rows-only in the full registry
-    (iterative merging is not SQL-expressible); correctness is the
-    two-code-path algebraic invariant + reconstruction + monotonicity
-    + partitioning-invariance pytest battery in tests/test_bpe.py."""
-    from .bpe import bpe_pipeline
-
-    docs = load_table(spark, sf_dir, "documents")
-    _, table = bpe_pipeline(docs, n_merges=64, max_vocab=10_000)
-    return table
-
-
 _CHUNK_CTE = """
     WITH chunk_toks AS (
       SELECT doc_id,
@@ -2740,31 +1939,6 @@ _CHUNK_CTE = """
       FROM chunk_toks WHERE n > 0
     )
 """
-
-
-@_register(
-    "text_chunk_windows",
-    # Window/stride constants 128/96 mirror pack.DEFAULT_CHUNK_WINDOW /
-    # DEFAULT_CHUNK_STRIDE.
-    _CHUNK_CTE
-    + """
-    SELECT doc_id,
-           CAST(chunk_id AS BIGINT) AS chunk_id,
-           CAST(chunk_id * 96 AS BIGINT) AS chunk_start,
-           CAST(LEAST(128, n - chunk_id * 96) AS BIGINT) AS chunk_len
-    FROM chunk_rows
-    """,
-)
-def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window document chunking (functions/pack.py chunk_windows
-    — the dual of packing): long docs split into stride-overlapped
-    training windows, short tail kept. Pure integer Column arithmetic +
-    a map-side sequence explode; the DuckDB oracle recomputes every
-    (chunk_id, start, len) row bit-for-bit."""
-    from .pack import chunk_windows
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_windows(docs)
 
 
 @_register(
@@ -2786,7 +1960,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc chunking rollup over text_chunk_windows: window count,
+    """Per-doc chunking rollup over pack.chunk_windows: window count,
     covered tokens (n_tokens + overlap double-count), short-tail
     length. One exchange on doc_id; every doc gets a row."""
     from .pack import chunk_census

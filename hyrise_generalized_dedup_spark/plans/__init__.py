@@ -1,13 +1,3 @@
 from .relational import RELATIONAL_ORACLES, RELATIONAL_QUERIES  # noqa: F401
 from . import relational2  # noqa: F401  (registers into the same dicts)
 from . import relational3  # noqa: F401  (registers into the same dicts)
-from . import relational4  # noqa: F401  (TPC-DS-shaped tranche)
-from . import relational5  # noqa: F401  (Join Order Benchmark-shaped tranche)
-from . import relational6  # noqa: F401  (second TPC-DS-shaped tranche)
-from . import relational7  # noqa: F401  (third TPC-DS-shaped tranche)
-from . import relational8  # noqa: F401  (fourth TPC-DS-shaped tranche)
-from . import relational9  # noqa: F401  (fifth TPC-DS-shaped tranche)
-from . import relational10  # noqa: F401  (sixth TPC-DS-shaped tranche)
-from . import relational11  # noqa: F401  (seventh TPC-DS-shaped tranche)
-from . import relational12  # noqa: F401  (eighth TPC-DS-shaped tranche)
-from . import relational13  # noqa: F401  (ninth TPC-DS-shaped tranche)

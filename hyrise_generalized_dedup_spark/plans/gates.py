@@ -14,8 +14,9 @@ the merged oracle stay column-aligned by construction. A value-hash
 mismatch in ANY component fails the slot, preserving per-component
 sensitivity. Every component ALSO remains individually registered in the
 full registries and is individually diffed against DuckDB in pytest
-(tests/test_relational.py parametrizes over the FULL registry), so no
-operator loses evidence — the merge only compresses driver slots.
+(tests/test_relational.py, tests/test_gates.py and the per-module test
+files), so no operator loses evidence — the merge only compresses driver
+slots.
 """
 
 from __future__ import annotations
@@ -662,9 +663,7 @@ PASSTHROUGH_SLOTS = [
     # ann (2; lsh_buckets merged with the semdedup manifest into g_ann_dedup)
     "ann_topk_brute",
     "ann_topk_lsh",
-    # multimodal (2; mm_features — the stubbed-decoder plumbing slot —
-    # was superseded in round 5 by the oracle-backed real-decode slot;
-    # it stays in the full pytest registry)
+    # multimodal (2)
     "mm_media_stats",
     "mm_decoded_features",
     # text (1; the other four are joined into 2 gates above)

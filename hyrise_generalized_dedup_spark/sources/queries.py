@@ -1,13 +1,4 @@
-"""Driver-checkable gates for the source readers (full registry).
-
-`import_binary_roundtrip` exercises the reference binary table format
-end-to-end inside one query: a deterministic typed fixture (all five
-reference column types + NULLs + multi-chunk) is exported with
-`export_binary`, re-read with `load_binary`, and returned; the DuckDB
-oracle states the same rows as a VALUES literal. A hash-exact match
-proves the writer and parser agree byte-level with the declared
-semantics (reference: binary_parser.cpp, binary_writer.cpp).
-"""
+"""Driver-checkable gates for the source readers (full registry)."""
 
 from __future__ import annotations
 
@@ -16,68 +7,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from .binary import export_binary, load_binary
-
-_FIXTURE_ROWS = [
-    ("AAAAA", 1, 100, 1.5, 11.1),
-    ("BBBBBBBBBB", 2, 200, 2.25, 22.2),
-    (None, 3, None, 3.75, None),
-    ("DDDDDDDDDDDDDDDDDDDD", None, 400, None, 44.4),
-    ("e", 5, 500, 5.5, 55.5),
-]
-_FIXTURE_SCHEMA = StructType(
-    [
-        StructField("a", StringType(), True),
-        StructField("b", IntegerType(), True),
-        StructField("c", LongType(), True),
-        StructField("d", FloatType(), True),
-        StructField("e", DoubleType(), True),
-    ]
-)
-
-
-def q_import_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(_FIXTURE_ROWS, _FIXTURE_SCHEMA)
-    path = os.path.join(tempfile.mkdtemp(prefix="gd_bin_"), "fixture.bin")
-    # chunk_size=2 -> 3 chunks: the multi-chunk header/segment framing is
-    # part of what the round trip must preserve; per-chunk encodings so
-    # the gate drives all three encoded writers (dictionary null-id
-    # vector, run merging, FoR falls back to unencoded for non-int here)
-    # plus the reference's encoded-then-mutable-last-chunk shape
-    export_binary(
-        df,
-        path,
-        chunk_size=2,
-        encodings=[["dictionary"] * 5, ["runlength"] * 5, ["unencoded"] * 5],
-    )
-    back = load_binary(spark, path)
-    # float32 -> double for a stable cross-engine hash (DuckDB VALUES
-    # literals are doubles); the CAST is part of the gate's contract
-    return back.select(
-        "a", "b", "c", F.col("d").cast("double").alias("d"), "e"
-    ).orderBy("b")
-
-
-_ORACLE = """
-SELECT a, b, c, d, e FROM (VALUES
-  ('AAAAA', 1, CAST(100 AS BIGINT), CAST(CAST(1.5 AS FLOAT) AS DOUBLE), CAST(11.1 AS DOUBLE)),
-  ('BBBBBBBBBB', 2, CAST(200 AS BIGINT), CAST(CAST(2.25 AS FLOAT) AS DOUBLE), CAST(22.2 AS DOUBLE)),
-  (NULL, 3, NULL, CAST(CAST(3.75 AS FLOAT) AS DOUBLE), NULL),
-  ('DDDDDDDDDDDDDDDDDDDD', NULL, CAST(400 AS BIGINT), NULL, CAST(44.4 AS DOUBLE)),
-  ('e', 5, CAST(500 AS BIGINT), CAST(CAST(5.5 AS FLOAT) AS DOUBLE), CAST(55.5 AS DOUBLE))
-) AS t(a, b, c, d, e)
-ORDER BY b
-"""
 
 def q_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-table semantics end-to-end inside one query.
@@ -124,14 +54,8 @@ FROM documents WHERE doc_id % 3 = 0
 ORDER BY read_kind
 """
 
-SOURCE_QUERIES = {
-    "import_binary_roundtrip": q_import_binary_roundtrip,
-    "iceberg_time_travel": q_iceberg_time_travel,
-}
-SOURCE_ORACLES = {
-    "import_binary_roundtrip": _ORACLE,
-    "iceberg_time_travel": _ICE_ORACLE,
-}
+SOURCE_QUERIES = {"iceberg_time_travel": q_iceberg_time_travel}
+SOURCE_ORACLES = {"iceberg_time_travel": _ICE_ORACLE}
 
 
 def q_iceberg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,46 +119,6 @@ ORDER BY change_kind
 
 SOURCE_QUERIES["iceberg_snapshot_diff"] = q_iceberg_snapshot_diff
 SOURCE_ORACLES["iceberg_snapshot_diff"] = _ICE_DIFF_ORACLE
-
-
-def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL source/sink round trip (sources/jsonl.py): write `documents`
-    as JSON-lines, read it back with the explicit schema, and summarize
-    per language — the DuckDB oracle states the same summary straight off
-    the parquet table, so a hash-exact match proves the encode/decode
-    loses nothing (row count, ids, char counts, lang strings)."""
-    from .jsonl import load_jsonl, write_jsonl
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    path = os.path.join(tempfile.mkdtemp(prefix="gd_jsonl_"), "docs.jsonl")
-    write_jsonl(docs, path)
-    back = load_jsonl(
-        spark,
-        path,
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
-    return (
-        back.groupBy("lang")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("sum_ids"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(F.length("text")).cast("long").alias("sum_text_len"),
-        )
-        .orderBy("lang")
-    )
-
-
-_JSONL_ORACLE = """
-SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(SUM(length(text)) AS BIGINT) AS sum_text_len
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-SOURCE_QUERIES["jsonl_roundtrip"] = q_jsonl_roundtrip
-SOURCE_ORACLES["jsonl_roundtrip"] = _JSONL_ORACLE
 
 
 def q_iceberg_pruned_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,20 +507,3 @@ def q_meta_segments_sfdir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SOURCE_QUERIES["meta_segments_sfdir"] = q_meta_segments_sfdir
-
-
-def q_meta_segments_accurate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """meta_segments_accurate over the fixture warehouse: the footer
-    surface plus EXACT per-row-group distinct counts read executor-side.
-    LIVE-parity-tested against a DuckDB file_row_number twin in
-    tests/test_meta.py (the twin needs per-file row-group sizes, which a
-    static driver oracle cannot express — registry/pytest surface)."""
-    from .meta import parquet_segments_accurate, write_meta_fixture
-
-    write_meta_fixture(_META_FIXTURE_DIR)
-    return parquet_segments_accurate(spark, _META_FIXTURE_DIR).orderBy(
-        "table_name", "file_name", "chunk_id", "column_id"
-    )
-
-
-SOURCE_QUERIES["meta_segments_accurate"] = q_meta_segments_accurate

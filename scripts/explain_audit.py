@@ -64,74 +64,27 @@ AUDITS = {
         ["HashAggregate", "Generate explode"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    "qds_above_nation_avg_customers": (
-        ["BroadcastHashJoin"], ["CartesianProduct"],
-    ),
-    "code_block_clones": (
-        ["Generate explode", "HashAggregate"],
-        ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
-    ),
-    "code_curation_manifest": (
-        ["HashAggregate", "ReadSchema: struct<doc_id:bigint,text:string>"],
-        ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
-    ),
-    "qds_return_rate_outliers": (
-        ["BroadcastHashJoin"], ["CartesianProduct"],
-    ),
-    # round-5 continuation: license/import/snapshot + tranche-6 shapes
+    # round-5 continuation: license/snapshot shapes
     "code_license_census": (
         ["ReadSchema: struct<doc_id:bigint,text:string>", "CODEGEN"],
         ["MapInPandas", "BatchEvalPython", "Exchange"],
-    ),
-    "code_import_census": (
-        ["Generate explode", "HashAggregate"],
-        ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
     ),
     "code_snapshot_latest": (
         # window op over synthesized keys; only doc_id is read from parquet
         ["Window", "ReadSchema: struct<doc_id:bigint>"],
         ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
     ),
-    "qds_streak_islands": (
-        ["Window", "HashAggregate"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
-    "qds_conditional_distinct": (
-        ["BroadcastHashJoin", "HashAggregate"],
-        ["CartesianProduct"],
-    ),
-    "qds_grouping_sets_report": (
-        ["Union", "HashAggregate"],
-        ["CartesianProduct", "MapInPandas"],
-    ),
-    # round-5 final additions: line dedup / vocab / shuffle / roles /
-    # tranche-8 shapes — all pure-JVM, no Python, no cartesian anywhere
+    # round-5 final additions: line dedup / roles —
+    # all pure-JVM, no Python, no cartesian anywhere
     "code_line_dedup": (
         # line explode + census join + per-doc regroup; content crosses
         # exactly the two expected shuffles, no Python
         ["Generate posexplode", "HashAggregate"],
         ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
     ),
-    "text_vocab_census": (
-        ["Generate explode", "HashAggregate"],
-        ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
-    ),
-    "corpus_shuffle": (
-        # one bucket-keyed exchange + per-bucket window; doc_id-only scan
-        ["Window", "ReadSchema: struct<doc_id:bigint>"],
-        ["MapInPandas", "BatchEvalPython", "CartesianProduct"],
-    ),
     "code_file_roles": (
         ["ReadSchema: struct<doc_id:bigint,text:string>", "CODEGEN"],
         ["MapInPandas", "BatchEvalPython", "Exchange"],
-    ),
-    "qds_brand_basket_lift": (
-        ["BroadcastHashJoin", "HashAggregate"],
-        ["CartesianProduct", "MapInPandas"],
-    ),
-    "qds_retention_matrix": (
-        ["HashAggregate"],
-        ["CartesianProduct", "MapInPandas", "BroadcastNestedLoopJoin"],
     ),
     # round-5 leakage-safe split: pure map-only column math — a pruned
     # scan, zero shuffles, zero Python (text_heavy_lines is not audited

@@ -207,6 +207,9 @@ def test_cosine_vec_matches_catalyst(spark):
         (i, [rng.uniform(-1, 1) for _ in range(64)], [rng.uniform(-1, 1) for _ in range(64)])
         for i in range(300)
     ]
+    # NULL and ragged vectors: the Catalyst fold yields NULL for both
+    vec = [rng.uniform(-1, 1) for _ in range(64)]
+    rows += [(300, None, vec), (301, vec, None), (302, None, None), (303, vec, vec[:32])]
     # (zero-norm vectors are not tested: the Catalyst reference itself
     # raises DIVIDE_BY_ZERO under ANSI mode, so the engine never sees them)
     df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
@@ -220,6 +223,8 @@ def test_cosine_vec_matches_catalyst(spark):
     }
     import math
 
+    for i in (300, 301, 302, 303):
+        assert got[i] == (None, None), i
     for i, (c1, c2) in got.items():
         if c1 is None or (isinstance(c1, float) and math.isnan(c1)):
             assert c2 is None or math.isnan(c2), i

@@ -250,8 +250,6 @@ def test_fork_containment_vs_jaccard(spark):
         "source_overlap",
         "code_pii_signals",
         "code_clone_census",
-        "code_curation_manifest",
-        "code_block_clones",
         "code_leakage_split",
         "code_repo_census",
     ],
@@ -406,72 +404,6 @@ def test_clone_normalization_python_oracle(spark):
     assert len(got) > 50
     for content, norm in got.items():
         assert norm == norm_py(content), content[:120]
-
-
-def test_code_curation_manifest_semantics(spark, tmp_path):
-    """Planted corpus: every drop/keep/redact reason fires exactly where
-    intended. Written to parquet so the registry query runs unmodified."""
-    clean = "def alpha(a):\n    return a + 1"
-    rows = [
-        (0, clean),                                    # canonical -> keep
-        (1, "# note\ndef alpha(a):\n    return a + 1"),  # format dup of 0
-        (2, "def beta(b):\n    return b + 7"),         # type-2 clone of 0
-        (3, "x" * 1500),                               # quality fail (long line)
-        (4, 'def gamma(c):\n    key = "0123456789ab"\n    api_key = "zzzzzzzzzzzz"\n    return c'),  # pii, keepworthy
-        (5, "<?xml version='1.0'?>\n<d/>"),            # xml data file
-        (6, "# SPDX-License-Identifier: GPL-3.0-only\ndef delta(d):\n    return d * 3"),  # copyleft
-        # multi-tag head: the FIRST SPDX tag wins (MIT), the later GPL
-        # tag must not flip the decision — Spark and the oracle must
-        # agree on first-tag semantics
-        (7, "# SPDX-License-Identifier: MIT\n# SPDX-License-Identifier: GPL-3.0-only\ndef eps(e):\n    return e - 4"),
-    ]
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    pdf["lang"] = "py"
-    pdf["source"] = "synth"
-    pdf["n_chars"] = pdf["text"].str.len()
-    sf_dir = str(tmp_path / "sf")
-    import os as _os
-
-    _os.makedirs(sf_dir, exist_ok=True)
-    pdf.to_parquet(_os.path.join(sf_dir, "documents.parquet"))
-
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-    from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
-
-    df = TEXT_QUERIES["code_curation_manifest"](spark, sf_dir)
-    got = {r["doc_id"]: r.asDict() for r in df.collect()}
-    assert got[0] == dict(doc_id=0, drop_format_dup=0, drop_clone_dup=0,
-                          drop_quality=0, drop_license=0,
-                          needs_redaction=0, keep=1)
-    # format dup: non-canonical on BOTH censuses (format-equal => clone-equal)
-    assert got[1]["drop_format_dup"] == 1 and got[1]["keep"] == 0
-    assert got[1]["drop_clone_dup"] == 1
-    # type-2 clone: format-distinct but clone-non-canonical
-    assert got[2]["drop_format_dup"] == 0 and got[2]["drop_clone_dup"] == 1
-    assert got[2]["keep"] == 0
-    assert got[3]["drop_quality"] == 1 and got[3]["keep"] == 0
-    # pii survivor: kept AND flagged for redaction
-    assert got[4] == dict(doc_id=4, drop_format_dup=0, drop_clone_dup=0,
-                          drop_quality=0, drop_license=0,
-                          needs_redaction=1, keep=1)
-    assert got[5]["drop_quality"] == 1 and got[5]["keep"] == 0
-    # copyleft: clean content, unique canonical forms — dropped on
-    # license alone
-    assert got[6] == dict(doc_id=6, drop_format_dup=0, drop_clone_dup=0,
-                          drop_quality=0, drop_license=1,
-                          needs_redaction=0, keep=0)
-    # first SPDX tag (MIT) wins over the later GPL tag
-    assert got[7]["drop_license"] == 0 and got[7]["keep"] == 1
-    # the DuckDB restatement agrees on the planted corpus too
-    ok, msg = compare_to_duckdb(
-        df, TEXT_ORACLES["code_curation_manifest"], sf_dir
-    )
-    assert ok, msg
 
 
 def test_block_clone_census_semantics(spark):

@@ -209,3 +209,28 @@ def test_served_corpus_packs_and_offsets_compose(spark, served):
         last["global_token_offset"] + last["srv_n_tokens"]
         == sum(ptok.values())
     )
+
+
+def test_corpus_shuffle_is_a_permutation(spark, sf_tiny):
+    """Every doc appears exactly once; ranks are 1..n per bucket; the
+    order is reproducible and partitioning-invariant."""
+    from hyrise_generalized_dedup_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_tiny, "documents")
+    out = shuffle_order(docs).collect()
+    assert len(out) == len({r["doc_id"] for r in out}) == docs.count()
+    by_bucket = {}
+    for r in out:
+        by_bucket.setdefault(r["bucket"], []).append(r["rank_in_bucket"])
+    for b, ranks in by_bucket.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1)), b
+    # reproducible across repartitionings
+    again = shuffle_order(docs.repartition(7)).collect()
+    assert {(r["doc_id"], r["bucket"], r["rank_in_bucket"]) for r in again} == {
+        (r["doc_id"], r["bucket"], r["rank_in_bucket"]) for r in out
+    }
+    # a different seed produces a different order
+    other = shuffle_order(docs, seed="other").collect()
+    assert {(r["doc_id"], r["rank_in_bucket"]) for r in other} != {
+        (r["doc_id"], r["rank_in_bucket"]) for r in out
+    }

@@ -378,41 +378,6 @@ def test_gopher_quality_signals(spark):
     assert out[6].swr == 1.0 and out[6].mwl == 6.0   # one token 'a....b'
 
 
-def test_curation_manifest_matches_duckdb(spark, sf_tiny):
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-    from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
-
-    df = TEXT_QUERIES["curation_manifest"](spark, sf_tiny)
-    ok, msg = compare_to_duckdb(df, TEXT_ORACLES["curation_manifest"], sf_tiny)
-    assert ok, msg
-    rows = df.collect()
-    assert len(rows) > 0
-    # flags are consistent: keep == no drop reason fired
-    for r in rows:
-        assert r.keep == int(
-            r.drop_dup == 0 and r.drop_quality == 0 and r.drop_contaminated == 0
-        ), r
-    # the manifest is non-vacuous on the driver corpus: something kept,
-    # and at least one drop reason fires somewhere
-    assert any(r.keep for r in rows)
-    assert any(r.drop_quality or r.drop_dup or r.drop_contaminated for r in rows)
-
-
-def test_events_json_profile_matches_duckdb(spark, sf_tiny):
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-    from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
-
-    df = TEXT_QUERIES["events_json_profile"](spark, sf_tiny)
-    ok, msg = compare_to_duckdb(df, TEXT_ORACLES["events_json_profile"], sf_tiny)
-    assert ok, msg
-
-
 def test_events_funnel_ordering_semantics(spark, tmp_path):
     """Planted sequences: a step only counts when its first event falls
     strictly after the previous step's first event."""
@@ -476,98 +441,6 @@ def test_events_funnel_ordering_semantics(spark, tmp_path):
     assert ok, msg
 
 
-def test_stratified_sampling_deterministic_and_converges(spark, sf_tiny):
-    """The hash-bucket sample is partitioning-invariant (identical census
-    under different repartitionings) and converges to the target rate on
-    a large id range (binomial bound, not exact)."""
-    import hashlib
-
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        MIXTURE_RATES,
-        TEXT_QUERIES,
-        _mixture_threshold,
-    )
-
-    q = TEXT_QUERIES["corpus_sample_stratified"]
-    a = sorted(tuple(r) for r in q(spark, sf_tiny).collect())
-    # a python mirror over the same parquet proves the bucket math
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_tiny}/documents.parquet", columns=["doc_id", "source"])
-    exp: dict[str, list[int]] = {}
-    for doc_id, source in zip(t["doc_id"].to_pylist(), t["source"].to_pylist()):
-        h = hashlib.sha256(str(doc_id).encode()).hexdigest()
-        bucket = int(h[62], 16) * 16 + int(h[63], 16)
-        thr = _mixture_threshold(MIXTURE_RATES.get(source, 0.125))
-        exp.setdefault(source, []).append(int(bucket < thr))
-    mirror = sorted(
-        (s, len(v), sum(v), sum(v) / len(v)) for s, v in exp.items()
-    )
-    assert [(r[0], r[1], r[2]) for r in a] == [(m[0], m[1], m[2]) for m in mirror]
-    # convergence: 100k synthetic ids at rate 0.5 stay within 1%
-    df = spark.range(100_000).select(
-        F.lit("src2").alias("source"), F.col("id").alias("doc_id")
-    )
-    import pyspark.sql.functions as SF
-
-    sha = SF.sha2(SF.col("doc_id").cast("string"), 256)
-    hexd = "0123456789abcdef"
-    bucket = (
-        (SF.instr(SF.lit(hexd), SF.substring(sha, 63, 1)) - 1) * 16
-        + (SF.instr(SF.lit(hexd), SF.substring(sha, 64, 1)) - 1)
-    )
-    kept = df.filter(bucket < _mixture_threshold(0.5)).count()
-    assert abs(kept / 100_000 - 0.5) < 0.01
-
-
-def test_pack_sequences_boundaries(spark, tmp_path):
-    """Python-mirror check on a corpus that genuinely crosses sequence
-    boundaries: packing is contiguous in doc_id order per source, the
-    straddling doc belongs to the sequence it starts in, and every
-    non-final sequence ends at or past the budget."""
-    import os
-
-    import pandas as pd
-
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        SEQ_LEN,
-        TEXT_QUERIES,
-    )
-
-    rows = []
-    for i in range(120):
-        n_tok = 100 + (i * 37) % 400  # 100..499 tokens, deterministic
-        rows.append((i, " ".join(f"w{j}" for j in range(n_tok)),
-                     "py", f"s{i % 2}", n_tok))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"])
-    sf_dir = str(tmp_path / "sf")
-    os.makedirs(sf_dir, exist_ok=True)
-    pdf.to_parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    got = {
-        (r["source"], r["seq_id"]): (r["n_docs"], r["n_tokens"], r["first_doc"], r["last_doc"])
-        for r in TEXT_QUERIES["corpus_pack_sequences"](spark, sf_dir).collect()
-    }
-    # python mirror
-    exp = {}
-    for src in ("s0", "s1"):
-        cum = 0
-        for i, _, _, s, n in rows:
-            if s != src:
-                continue
-            seq = cum // SEQ_LEN
-            nd, nt, fd, ld = exp.get((src, seq), (0, 0, i, i))
-            exp[(src, seq)] = (nd + 1, nt + n, min(fd, i), max(ld, i))
-            cum += n
-    assert got == exp
-    assert len({seq for (_, seq) in got}) >= 4, "fixture must span sequences"
-    # contiguity: per source, doc ranges of consecutive seq_ids do not overlap
-    for src in ("s0", "s1"):
-        seqs = sorted((seq, v) for (s, seq), v in got.items() if s == src)
-        for (s1_, v1), (s2_, v2) in zip(seqs, seqs[1:]):
-            assert v1[3] < v2[2], (src, s1_, s2_)
-
-
 def test_resize_nearest_exact_and_shrinks():
     """Index-mapped resize: exact pixels from the source, any geometry."""
     import numpy as np
@@ -583,18 +456,6 @@ def test_resize_nearest_exact_and_shrinks():
     # upscale (out > in) repeats source pixels, never interpolates
     up = resize_nearest(px[:2, :2], 4, 4)
     assert set(up.ravel().tolist()) <= set(px[:2, :2].ravel().tolist())
-
-
-def test_mm_thumbnails_matches_duckdb(spark, sf_tiny):
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-    from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
-
-    df = TEXT_QUERIES["mm_thumbnails"](spark, sf_tiny)
-    ok, msg = compare_to_duckdb(df, TEXT_ORACLES["mm_thumbnails"], sf_tiny)
-    assert ok, msg
 
 
 def test_contamination_spans_planted_quotes(spark):

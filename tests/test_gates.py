@@ -12,13 +12,23 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+import bench
 from hyrise_generalized_dedup_spark.plans.gates import (
     DRIVER_SLOT_CAP,
     JOINED_GATES,
     MERGED_GATES,
     PASSTHROUGH_SLOTS,
+    ROWS_ONLY_MERGED,
 )
 from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
+
+# Registry queries that neither a driver slot nor a bench.HEADLINE leaf
+# runs, kept because each is the only test of an engine path that a slot
+# or leaf does run. Anything else unreached is dead weight: delete it.
+UNREACHED_KEPT: dict[str, str] = {
+    "embedding_neardup_pairs": "semdedup_keepers (g_ann_dedup slot) drops the id_b side "
+    "of these pairs; only this query's oracle checks the pair list and its cosines",
+}
 
 
 def test_driver_registry_within_cap():
@@ -40,6 +50,20 @@ def test_no_component_lost_an_oracle():
     # passthrough slots must exist in the full registry
     for slot in PASSTHROUGH_SLOTS:
         assert slot in full_q, slot
+
+
+def test_every_registry_query_is_reached():
+    """Every query in the full registry is run by a driver slot, by a
+    bench.HEADLINE leaf, or is on the UNREACHED_KEPT allowlist."""
+    reached = set(PASSTHROUGH_SLOTS) | set(bench.HEADLINE)
+    reached |= {q for parts in JOINED_GATES.values() for q, _ in parts}
+    for branches in (*MERGED_GATES.values(), *ROWS_ONLY_MERGED.values()):
+        reached |= {q for _, q, _ in branches}
+    full = set(entrymod._full_registries()[0])
+    unreached = sorted(full - reached - set(UNREACHED_KEPT))
+    assert not unreached, f"{len(unreached)} registry queries nothing reaches: {unreached}"
+    stale = sorted(set(UNREACHED_KEPT) - (full - reached))
+    assert not stale, f"UNREACHED_KEPT entries that are reached or gone: {stale}"
 
 
 @pytest.mark.parametrize("name", sorted(MERGED_GATES) + sorted(JOINED_GATES))

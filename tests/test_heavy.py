@@ -152,20 +152,6 @@ def test_negative_weight_rejected(spark):
         heavy_hitters(df, "v", k=1, capacity=8, weight_col="w")
 
 
-def test_text_heavy_lines_weighted_matches_duckdb(spark, sf_tiny):
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-    from hyrise_generalized_dedup_spark.testing import compare_to_duckdb
-
-    df = TEXT_QUERIES["text_heavy_lines_weighted"](spark, sf_tiny)
-    ok, msg = compare_to_duckdb(
-        df, TEXT_ORACLES["text_heavy_lines_weighted"], sf_tiny
-    )
-    assert ok, msg
-
-
 def test_weighted_randomized_vs_brute(spark):
     # one large fixed-seed randomized corpus, single Spark job (no
     # per-example Spark inside hypothesis — too slow); zipf-ish weights

@@ -162,6 +162,21 @@ def test_incremental_pure_deletion_equals_scratch(spark, tmp_path):
     shutil.rmtree(scratch_dir, ignore_errors=True)
 
 
+def test_incremental_remove_every_doc(spark, tmp_path):
+    """Removing the whole corpus leaves empty stage outputs and a summary
+    with zero counts and a NULL dedup ratio."""
+    full = to_spark(spark, generate(n_rows=60, seed=19)).cache()
+    out = str(tmp_path / "inc")
+    run_pipeline(spark, full, out, resume=False)
+    summary = incremental_update(spark, full.limit(0), out)
+    assert summary["n_removed_files"] == 60
+    assert summary["n_files"] == 0 and summary["total_segments"] == 0
+    assert summary["dedup_ratio"] is None
+    for stage in STAGES:
+        assert _stage_rows(spark, out, stage) == [], stage
+    shutil.rmtree(out, ignore_errors=True)
+
+
 def test_incremental_split_flip_census(spark, tmp_path):
     """Round-5 composition: retention manifest + leakage-safe split across
     an incremental refresh. Growth re-keys some clusters (new minimum

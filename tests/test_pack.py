@@ -258,26 +258,6 @@ def test_pack_contexts_excludes_text_by_default(spark):
     assert cols == ["pack_shard", "pack_id", "n_docs", "fill_tokens", "context_sha"]
 
 
-def test_pack_contexts_matches_duckdb_oracle(spark, sf_tiny):
-    import duckdb
-
-    from hyrise_generalized_dedup_spark.functions.queries import (
-        TEXT_ORACLES,
-        TEXT_QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{sf_tiny}/documents.parquet')"
-    )
-    duck = sorted(map(tuple, con.execute(TEXT_ORACLES["pack_contexts"]).fetchall()))
-    got = sorted(
-        map(tuple, TEXT_QUERIES["pack_contexts"](spark, sf_tiny).collect())
-    )
-    assert got == duck and len(got) > 0
-
-
 # ----------------------------------------------------------------- plan shape
 
 
@@ -300,9 +280,9 @@ def test_pack_plan_text_never_enters_python(spark, sf_tiny):
 def test_pack_contexts_plan_shape(spark, sf_tiny):
     """One pandas node (the projected walk); the concat/sha aggregation is
     a JVM ObjectHashAggregate with a map-side partial; no cartesian."""
-    from hyrise_generalized_dedup_spark.functions.queries import TEXT_QUERIES
+    from hyrise_generalized_dedup_spark.sources.tables import load_table
 
-    df = TEXT_QUERIES["pack_contexts"](spark, sf_tiny)
+    df = pack_contexts(load_table(spark, sf_tiny, "documents"), capacity=96, n_shards=8)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]

@@ -144,6 +144,23 @@ def test_determinism_fresh_rerun(spark, corpus, out_dir, summary, tmp_path):
     assert a == b
 
 
+@pytest.mark.parametrize("n_rows", [0, 20], ids=["empty", "all_null_content"])
+def test_degenerate_corpus_summary(spark, tmp_path, n_rows):
+    """A corpus with no segments (no rows, or only NULL content) runs every
+    stage and reports zero counts with a NULL dedup ratio, not a
+    DIVIDE_BY_ZERO from the summary."""
+    rows = [(f"r{i}", f"p{i}.py", f"c{i}", "python", None) for i in range(n_rows)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    summary = run_pipeline(spark, df, str(tmp_path / "out"), resume=False)
+    assert summary["n_files"] == n_rows
+    assert summary["total_segments"] == 0
+    assert summary["distinct_bases"] == 0
+    assert summary["n_candidate_pairs"] == 0
+    assert summary["dedup_ratio"] is None
+
+
 def _old_and_grown(spark, corpus):
     """A quarter of the corpus held out by commit hash (the prior run's
     input) and the whole corpus (the grown one)."""
