@@ -9,8 +9,8 @@ line: {"metric": ..., "value": <total sec>, "unit": "sec",
 The dedup-pipeline throughput (files/sec on the synthetic code corpus)
 is the north-star metric analog of the reference benchmark runner's
 items/sec (src/benchmarklib/benchmark_runner.cpp:266-282); scaling
-evidence across parallelism levels lives in scripts/bench_scaling.py
-and BENCH/BASELINE.md.
+evidence across parallelism levels lives in scripts/scaling.py
+(``scaling.py pipeline``) and BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

@@ -127,9 +127,6 @@ def release_candidates(pairs: DataFrame) -> None:
     cached = getattr(pairs, "_gd_persisted", None)
     if cached is not None:
         hard_unpersist(cached)
-    bc = getattr(pairs, "_gd_broadcast", None)
-    if bc is not None:  # legacy python-side broadcast block
-        bc.unpersist()
     side = getattr(pairs, "_gd_sideboard_dir", None)
     if side is not None:  # verified_edges' mmapped signature sideboard
         if getattr(pairs, "_gd_sideboard_eager", False):

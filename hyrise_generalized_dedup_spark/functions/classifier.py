@@ -455,16 +455,8 @@ def classify_quality(
     spark = docs.sparkSession
     # Half the parallelism measured best at both bench scales (full
     # parallelism pays per-task dispatch on the 26 tiny sequential jobs;
-    # fewer partitions serialize the grad compute). Parameterised for
-    # cluster-scale tuning like the other scale-dependent knobs.
-    import os
-
-    n_parts = int(
-        os.environ.get(
-            "SPARK_GRAFT_CLF_PARTS",
-            max(2, spark.sparkContext.defaultParallelism // 2),
-        )
-    )
+    # fewer partitions serialize the grad compute).
+    n_parts = max(2, spark.sparkContext.defaultParallelism // 2)
     blobs = (
         csr_blobs(
             packed_features(

@@ -96,18 +96,6 @@ def is_xml_head(col: Column) -> Column:
     return col.startswith("<?xml").cast("int")
 
 
-def stack_keep(col: Column) -> Column:
-    """The Stack's composite default keep rule: all line/charset caps
-    hold and the file is neither auto-generated nor an XML data file."""
-    return (
-        (max_line_length(col) <= MAX_LINE_LIMIT)
-        & (avg_line_length(col) <= AVG_LINE_LIMIT)
-        & (alnum_fraction(col) >= MIN_ALNUM_FRAC)
-        & (is_autogenerated(col) == 0)
-        & (is_xml_head(col) == 0)
-    ).cast("int")
-
-
 # --- formatting-invariant normalization ---------------------------------
 
 # Line-comment openers across the corpus languages (c/js '//...', py/sh
@@ -264,30 +252,6 @@ def clone_sha(col: Column) -> Column:
     return F.sha2(normalize_tokens(col), 256)
 
 
-# --- function-block splitting -------------------------------------------
-#
-# Cross-FILE clone detection misses the dominant intra-corpus copy mode:
-# individual functions pasted between otherwise-different files. Split
-# each file at top-level definition openers (the regex family below),
-# then census the blocks — at block granularity the type-2 canonical
-# form finds "this exact function, renamed" across the corpus. RE2 has
-# no lookahead, so the split uses the same mark/sweep trick as the
-# keyword pass: prefix each opener with \x02, split on \x02.
-
-_BLOCK_OPENER = "(?m)^(def |class |function )"
-_BLOCK_MARK = "\x02"
-
-
-def split_code_blocks(col: Column) -> Column:
-    """Array of top-level code blocks: the pre-definition preamble plus
-    one element per `def`/`class`/`function` opener at column 0.
-    Indentation-nested definitions stay inside their parent block (the
-    opener must sit at line start), so a block is a whole top-level
-    unit."""
-    marked = F.regexp_replace(col, _BLOCK_OPENER, _BLOCK_MARK + "$1")
-    return F.split(marked, _BLOCK_MARK)
-
-
 # --- language identification (routing) ------------------------------------
 #
 # The Stack assigns language by file extension before any content filter
@@ -384,49 +348,6 @@ def license_keep(license_col: Column) -> Column:
     families. No license detected ('none') is a DROP, matching the
     published pipeline (unlicensed code is not redistributable)."""
     return license_col.rlike(_PERMISSIVE_PREFIX).cast("int")
-
-
-# --- import / dependency extraction -----------------------------------------
-#
-# A corpus-level dependency census ("which modules does this corpus lean
-# on") needs per-file import extraction. One conservative pattern per
-# ecosystem, all line-anchored, all single-capture-group so both Spark's
-# and DuckDB's regexp_extract_all(…, 1) agree. Heuristic by design: ES6
-# `import X from 'y'` yields the binding name, not 'y' — a census signal,
-# not a compiler. Line anchoring uses explicit `(?:^|\n)` instead of
-# `(?m)^`: Java MULTILINE also treats \r / \u2028 / \u2029 as line
-# terminators where RE2 (DuckDB) recognizes only \n, so (?m)^ silently
-# diverges on CR-line text; the explicit alternation agrees everywhere.
-
-IMPORT_PATTERNS: list[str] = [
-    # python / java / go-ish: `import a.b.c`
-    "(?:^|\\n)[ \\t]*import[ \\t]+([A-Za-z_][A-Za-z0-9_.]*)",
-    # python: `from a.b import c`
-    "(?:^|\\n)[ \\t]*from[ \\t]+([A-Za-z_][A-Za-z0-9_.]*)[ \\t]+import",
-    # node: require('pkg') / require("pkg/sub")
-    "require\\(['\"]([A-Za-z0-9_@./-]+)['\"]\\)",
-    # c/c++: #include <a/b.h> or "a/b.h"
-    "(?:^|\\n)[ \\t]*#[ \\t]*include[ \\t]*[<\"]([A-Za-z0-9_./]+)[>\"]",
-]
-
-
-def import_targets(col: Column) -> Column:
-    """Distinct raw import targets across all ecosystem patterns
-    (array<string>; empty array for files with no imports)."""
-    arrs = [F.regexp_extract_all(col, F.lit(p), 1) for p in IMPORT_PATTERNS]
-    out = arrs[0]
-    for a in arrs[1:]:
-        out = F.concat(out, a)
-    return F.array_distinct(out)
-
-
-def import_roots(col: Column) -> Column:
-    """Distinct top-level modules: the segment before the first '.' or
-    '/' of each import target ('a.b.c' → 'a', 'pkg/sub' → 'pkg')."""
-    roots = F.transform(
-        import_targets(col), lambda x: F.split(x, "[./]").getItem(0)
-    )
-    return F.array_distinct(roots)
 
 
 # --- file-role routing (The Stack v2's path-based metadata pass) --------

@@ -39,9 +39,7 @@ class SketchUndersized(ValueError):
     """capacity too small to certify the requested top-k as exact."""
 
 
-def mg_candidates(
-    df: DataFrame, col: str, capacity: int = 4096, weight_col: str | None = None
-) -> DataFrame:
+def mg_candidates(df: DataFrame, col: str, capacity: int = 4096) -> DataFrame:
     """Per-partition Misra-Gries summaries over a string column.
 
     Returns (item, est) rows — at most ``capacity`` per partition, where
@@ -49,12 +47,6 @@ def mg_candidates(
     n_p/(capacity+1) — plus one NULL-item sentinel per partition whose
     ``est`` is the partition's (non-null) row count, so downstream can
     recover the exact total n without another scan.
-
-    With ``weight_col`` (non-negative integers, e.g. token counts), every
-    occurrence contributes its weight instead of 1: ``est`` approximates
-    per-item weight sums, the sentinel carries the partition's total
-    weight, and the retention guarantee becomes weight > W/(capacity+1)
-    — weighted MG is the standard mergeable-summaries generalization.
     """
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
@@ -72,20 +64,9 @@ def mg_candidates(
         state = None
         n_rows = 0
         for pdf in batches:
-            if weight_col is None:
-                vals = pdf[col].dropna()
-                n_rows += int(len(vals))
-                batch = vals.value_counts()
-            else:
-                sub = pdf[[col, weight_col]].dropna(subset=[col])
-                w = sub[weight_col].fillna(0)
-                if (w < 0).any():
-                    raise ValueError(
-                        f"negative weight in {weight_col!r}: the MG"
-                        " retention guarantee requires non-negative weights"
-                    )
-                n_rows += int(w.sum())
-                batch = w.groupby(sub[col]).sum()
+            vals = pdf[col].dropna()
+            n_rows += int(len(vals))
+            batch = vals.value_counts()
             state = batch if state is None else state.add(batch, fill_value=0)
             if len(state) > capacity:
                 # decrement-by-c* form of MG: subtract the (capacity+1)-th
@@ -98,21 +79,12 @@ def mg_candidates(
             {"item": items + [None], "est": ests + [n_rows]}
         ).astype({"est": "int64"})
 
-    cols = [F.col(col).alias(col)]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(weight_col))
-    return df.select(*cols).mapInPandas(
+    return df.select(F.col(col).alias(col)).mapInPandas(
         summarize, schema="item string, est long"
     )
 
 
-def heavy_hitters(
-    df: DataFrame,
-    col: str,
-    k: int = 20,
-    capacity: int = 4096,
-    weight_col: str | None = None,
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, k: int = 20, capacity: int = 4096) -> DataFrame:
     """Certified-exact top-k most frequent values of ``df[col]``.
 
     Returns (rank, item, n) with EXACT counts, ordered by (n DESC, item)
@@ -120,16 +92,12 @@ def heavy_hitters(
     :class:`SketchUndersized` if the sketch cannot certify exactness
     (k-th count <= n/(capacity+1)); raise ``capacity`` and rerun.
 
-    With ``weight_col``, "frequent" means largest exact WEIGHT SUM (e.g.
-    token-weighted boilerplate cost) and the certification threshold is
-    total_weight/(capacity+1); everything else is unchanged.
-
     Scale shape: sketch pass is map-only (bounded output); the verify
     pass shuffles only candidate keys (<= capacity x n_partitions); the
     certification check reads one k-row and one 1-row aggregate.
     """
     merged = (
-        mg_candidates(df, col, capacity, weight_col=weight_col)
+        mg_candidates(df, col, capacity)
         .groupBy("item")
         .agg(F.sum("est").alias("est"))
         .persist()  # bounded: <= capacity x n_partitions + 1 rows
@@ -140,17 +108,11 @@ def heavy_hitters(
     cands = merged.filter(F.col("item").isNotNull()).select(
         F.col("item").alias(col)
     )
-    measure = (
-        F.count(F.lit(1))
-        if weight_col is None
-        else F.sum(F.col(weight_col).cast("long"))
-    )
-    verify_cols = [col] if weight_col is None else [col, weight_col]
     exact = (
-        df.select(*verify_cols)
+        df.select(col)
         .join(F.broadcast(cands), col)
         .groupBy(col)
-        .agg(measure.alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
     top = (
         exact.orderBy(F.col("n").desc(), F.col(col).asc())

@@ -1,12 +1,5 @@
-"""Corpus mixture planning and rank-based quality pruning.
-
-Two steps between curation and serving in an LLM data pipeline:
-
-- **Mixture planning** (``mixture_plan``): given target sampling weights
-  per source and a global token budget, compute each source's repeat
-  factor and epoch count (the Pile/LLaMA-style static mixture table).
-  Pure per-source aggregate arithmetic — one partial-agg groupBy over
-  the corpus plus a broadcast join against the (tiny) weight table.
+"""Rank-based quality pruning, a step between curation and serving in
+an LLM data pipeline.
 
 - **Quality pruning** (``quality_prune``): keep the top ``keep_frac``
   of each source by a DISCRETE quality score (FineWeb-Edu keeps docs
@@ -23,76 +16,15 @@ Two steps between curation and serving in an LLM data pipeline:
   "top x%" for discrete scores.
 
 Reference scope note: the reference engine (C++ Hyrise fork) has no
-corpus-mixture stage; this module is part of the training-data-pipeline
+corpus-pruning stage; this module is part of the training-data-pipeline
 surface (SURVEY.md LLM-ops section) alongside functions/split.py and
 functions/pack.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from .text import token_count
-
-
-def mixture_plan(
-    docs: DataFrame,
-    weights: Mapping[str, float],
-    budget_tokens: int,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-source mixture table for a token budget.
-
-    Output, one row per source present in ``weights`` (sources in the
-    corpus but not in the map are dropped — an explicit mixture is a
-    whitelist):
-
-    - ``n_docs`` / ``n_tokens``: corpus-side size of the source
-    - ``weight``: the requested sampling weight (must sum to 1)
-    - ``target_tokens``: ``floor(weight * budget_tokens)``
-    - ``repeat_factor``: target_tokens / n_tokens (double; >1 means the
-      source is repeated across epochs, LLaMA-style)
-    - ``epochs``: ``ceil(repeat_factor)`` — passes over the source
-    - ``oversampled``: repeat_factor > 1
-    """
-    if budget_tokens < 1:
-        raise ValueError(f"budget_tokens must be >= 1, got {budget_tokens}")
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"weights must sum to 1, got {total}")
-    if any(w <= 0 for w in weights.values()):
-        raise ValueError("weights must be positive")
-
-    spark = docs.sparkSession
-    wdf = spark.createDataFrame(
-        sorted(weights.items()), "source string, weight double"
-    )
-    stats = (
-        docs.select(
-            F.col(source_col).alias("source"),
-            F.coalesce(token_count(F.col(text_col)), F.lit(0))
-            .cast("long")
-            .alias("_t"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("_t").cast("long").alias("n_tokens"),
-        )
-    )
-    target = F.floor(F.col("weight") * F.lit(float(budget_tokens))).cast("long")
-    repeat = F.col("target_tokens") / F.col("n_tokens")
-    return (
-        stats.join(F.broadcast(wdf), "source")
-        .withColumn("target_tokens", target)
-        .withColumn("repeat_factor", repeat)
-        .withColumn("epochs", F.ceil(F.col("repeat_factor")).cast("long"))
-        .withColumn("oversampled", F.col("repeat_factor") > 1.0)
-    )
 
 
 def quality_prune(

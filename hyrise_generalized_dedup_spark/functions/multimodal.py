@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as `binary` columns with a
-metadata struct; per-modality decode / feature-extract / resize /
-frame-sample are Arrow-batched UDFs over mapInPandas.
+metadata struct; per-modality decode and feature extraction are
+Arrow-batched UDFs over mapInPandas.
 
 Decoders: PNG (pure stdlib — zlib inflate + per-scanline unfilter per
 the public PNG spec, RFC 2083 §6) and WAV (stdlib ``wave``) decode for
@@ -15,7 +15,6 @@ without itself decoding anything.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
@@ -27,7 +26,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -230,16 +228,6 @@ def decode_wav(payload: bytes):
     return rate, np.frombuffer(frames, dtype="<i2")
 
 
-def deterministic_fake_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a real feature extractor: unit-norm
-    vector derived from the payload digest. Lets the downstream ANN /
-    join / clustering plumbing be exercised for real."""
-    digest = hashlib.sha256(payload).digest()
-    vals = [int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32 - 0.5 for i in range(dim)]
-    norm = sum(v * v for v in vals) ** 0.5 or 1.0
-    return [v / norm for v in vals]
-
-
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -381,116 +369,4 @@ def decode_media_features(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "modality", "mime", "payload").mapInPandas(
         run, _DECODED_SCHEMA
-    )
-
-
-_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("feat_dim", IntegerType(), False),
-        StructField("feat_norm", DoubleType(), False),
-        StructField("feat_head", DoubleType(), False),
-    ]
-)
-
-
-def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads — the real
-    Arrow batch path a production decoder would use; features come from
-    the deterministic fake (decode_* raise DecodeUnavailable)."""
-
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # per-item C call (the decoder analog: a real codec is also a
-            # per-item native call), then VECTORIZED feature math: all
-            # digests packed into one (n, dim) matrix, one normalize pass
-            digests = b"".join(
-                hashlib.sha256(bytes(p)).digest()[: 4 * 8] for p in pdf["payload"]
-            )
-            raw = np.frombuffer(digests, dtype=">u4").reshape(len(pdf), 8)
-            feats = raw.astype(np.float64) / 2**32 - 0.5
-            norms = np.maximum(np.linalg.norm(feats, axis=1), 1e-300)
-            unit = feats / norms[:, None]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "modality": pdf["modality"].to_numpy(),
-                    "n_bytes": pdf["n_bytes"].to_numpy(),
-                    "feat_dim": np.full(len(pdf), 8, dtype=np.int32),
-                    "feat_norm": np.linalg.norm(unit, axis=1),
-                    "feat_head": unit[:, 0],
-                }
-            )
-
-    return media.select("media_id", "modality", "payload", "n_bytes").mapInPandas(
-        run, _FEATURE_SCHEMA
-    )
-
-
-# --- image resize (thumbnail) over the real decode path -----------------
-
-_THUMB_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("thumb_w", IntegerType(), False),
-        StructField("thumb_h", IntegerType(), False),
-        StructField("thumb_sum", LongType(), False),
-        StructField("thumb_head", IntegerType(), False),
-    ]
-)
-
-
-def resize_nearest(px, out_w: int, out_h: int):
-    """Nearest-neighbor downsample via integer index mapping
-    out[y, x] = px[floor(y*h/out_h), floor(x*w/out_w)] — exact integer
-    math, so the oracle can restate every output pixel closed-form."""
-    import numpy as np
-
-    h, w = px.shape[:2]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return px[np.ix_(ys, xs)]
-
-
-def thumbnail_features(media: DataFrame, out_w: int = 4, out_h: int = 3) -> DataFrame:
-    """Decode PNG payloads and resize to a fixed thumbnail — the
-    feature-extraction shape of an image-training pipeline (decode ->
-    resize -> stats), with the resize REAL (numpy index math over the
-    decoded pixels), not stubbed. Arrow-batched mapInPandas; per-image
-    output is the thumbnail checksum + corner pixel, which the DuckDB
-    oracle recomputes from the fixture's closed-form pixel function."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, px = decode_png(bytes(payload))
-                th = resize_nearest(px, out_w, out_h)
-                rows.append(
-                    (
-                        int(mid),
-                        out_w,
-                        out_h,
-                        int(th.sum(dtype=np.int64)),
-                        int(th.flat[0]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "thumb_w", "thumb_h", "thumb_sum", "thumb_head"],
-            )
-
-    return (
-        media.filter(F.col("mime") == "image/png")
-        .select("media_id", "payload")
-        .mapInPandas(run, _THUMB_SCHEMA)
     )

@@ -164,62 +164,6 @@ def pack_table(
     return weighted.groupBy("pack_shard").applyInPandas(pack_group, schema)
 
 
-DEFAULT_SEP = "\n\n"
-
-
-def pack_contexts(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    capacity: int = DEFAULT_CAPACITY,
-    n_shards: int = DEFAULT_N_SHARDS,
-    salt: str = DEFAULT_SALT,
-    sep: str = DEFAULT_SEP,
-    include_text: bool = False,
-) -> DataFrame:
-    """Materialize the packed training contexts — the serving step.
-
-    One row per pack: ``(pack_shard, pack_id, n_docs, fill_tokens,
-    context_sha)`` where ``context_sha`` is the sha256 of the pack's
-    documents concatenated by ``sep`` in doc_id order (nulls read as
-    empty). Pass ``include_text=True`` to also emit ``context_text``
-    (the actual training example) — the sha-only default keeps the
-    audit query cheap.
-
-    Plan shape: the greedy walk runs on the PROJECTED (doc_id,
-    n_tokens) pairs only (see :func:`pack_table`); content then joins
-    the assignment on doc_id and aggregates on (pack_shard, pack_id) —
-    two content exchanges, all string work JVM-side (``collect_list``
-    + ``array_sort`` + ``array_join``; no Python touches content).
-    Per-group memory is bounded by construction: a pack's fill is
-    <= capacity tokens unless it is a single oversize document.
-    """
-    assignment = pack_table(docs, text_col, id_col, capacity, n_shards, salt)
-    content = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("_pk_text"),
-    )
-    ordered = F.transform(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("doc_id"), F.col("_pk_text")))
-        ),
-        lambda s: s["_pk_text"],
-    )
-    joined_text = F.array_join(ordered, sep)
-    aggs = [
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("pack_n_tokens").cast("long").alias("fill_tokens"),
-        F.sha2(joined_text, 256).alias("context_sha"),
-    ]
-    if include_text:
-        aggs.append(joined_text.alias("context_text"))
-    return (
-        assignment.join(content, "doc_id")
-        .groupBy("pack_shard", "pack_id")
-        .agg(*aggs)
-    )
-
-
 def pack_census(packed: DataFrame, capacity: int = DEFAULT_CAPACITY) -> DataFrame:
     """Per-pack fill census over :func:`pack_table` output: docs per
     pack, token fill, padding waste (0 for oversize single-doc packs),

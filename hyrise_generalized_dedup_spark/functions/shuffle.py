@@ -4,7 +4,7 @@ The last step before serving a training corpus: a reproducible global
 permutation (the terashuf job at cluster scale). Each document keys on
 sha256(seed || doc_id); the first hex digit picks one of 16 coarse
 buckets and a per-bucket row_number assigns the in-bucket rank, so the
-total order (bucket, rank_in_bucket) is a seeded permutation that is
+total order (srv_bucket, srv_rank) is a seeded permutation that is
 content-independent, partitioning-invariant, and identical across
 engines and runs — rand()-based shuffling is none of those.
 
@@ -21,33 +21,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 _HEX = "0123456789abcdef"
-
-
-def shuffle_order(
-    docs: DataFrame,
-    seed: str = "shuf",
-    n_buckets: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, bucket, rank_in_bucket) — iterate buckets in order, ranks
-    within, for the seeded global permutation. n_buckets must divide 16
-    or be 16 here (one hex digit); callers needing more fan-out take
-    more digits."""
-    if n_buckets < 1 or 16 % n_buckets:
-        raise ValueError("n_buckets must divide 16 (one hex digit)")
-    key = F.sha2(
-        F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")), 256
-    )
-    bucket = (F.instr(F.lit(_HEX), F.substring(key, 1, 1)) - 1) % n_buckets
-    keyed = docs.select(
-        F.col(id_col), key.alias("shuf_key"), bucket.cast("long").alias("bucket")
-    )
-    w = Window.partitionBy("bucket").orderBy("shuf_key", id_col)
-    return keyed.select(
-        id_col,
-        "bucket",
-        F.row_number().over(w).cast("long").alias("rank_in_bucket"),
-    )
 
 
 def serving_offsets(
@@ -68,8 +41,8 @@ def serving_offsets(
     ``global_token_offset`` is the sum of token counts of every
     earlier doc.
 
-    Plan shape: the same one bucket exchange as :func:`shuffle_order`
-    (the in-bucket cumulative sums ride the window's sort), plus a
+    Plan shape: one hash-partitioned exchange on the bucket key (the
+    in-bucket rank and cumulative sums ride the window's sort), plus a
     16-row bucket census whose running totals give each bucket's base
     offsets — broadcast back. Content never enters the operator; the
     offsets are a pure function of (doc_id, n_tokens, seed), so a SQL

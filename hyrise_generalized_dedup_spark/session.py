@@ -39,13 +39,13 @@ def get_spark(
     if shuffle_partitions is None:
         sp_env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
         if sp_env:
-            # explicit override for CLI-launched jobs (bench_scaling sets
-            # 3x cores: at a fixed heap, partitions == cores gives each
-            # hash-aggregate task heap/cores of map space, so the HIGH
-            # parallelism level spills/GC-thrashes on pair-scale stages
-            # while the low level coasts — an anti-scaling artifact of
-            # task sizing, not of the plan; 2-3x cores is also the
-            # documented real-cluster sizing)
+            # the pipeline CLI's way to size shuffles (e.g. 3x cores: at a
+            # fixed heap, partitions == cores gives each hash-aggregate
+            # task heap/cores of map space, so a high parallelism level
+            # spills/GC-thrashes on pair-scale stages while a low one
+            # coasts — an anti-scaling artifact of task sizing, not of
+            # the plan; 2-3x cores is also the documented real-cluster
+            # sizing)
             shuffle_partitions = int(sp_env)
         else:
             # local[N] -> N; a real cluster would use ~2-3x total executor cores.
@@ -73,13 +73,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    # On a real cluster each node has local SSD scratch that scales with
-    # the node count; on this single-VM sandbox all shuffle/spill streams
-    # share one ext4 disk, which serializes at high core counts. Allow
-    # redirecting scratch to tmpfs via env (bench_scaling sets it).
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

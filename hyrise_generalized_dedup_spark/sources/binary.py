@@ -30,10 +30,11 @@ fixtures (resources/test_data/bin/*.bin). Layout (little-endian):
 
 Spark-native shape: one .bin file is a driver-side artifact (the
 reference caps these at fixture scale too — its own binary fixtures are
-KB-sized); parsing decodes each chunk to Arrow-ready numpy columns and
-hands Spark ONE createDataFrame. Bulk interchange at 100 TB is parquet
-(see README "binary format" note) — this reader exists for drop-in
-compatibility with reference-produced .bin files, not as a bulk path.
+KB-sized); parsing decodes each chunk to numpy columns on the driver,
+where the meta tables (sources/meta.py) read them. Bulk interchange at
+100 TB is parquet (see README "binary format" note) — this reader
+exists for drop-in compatibility with reference-produced .bin files,
+not as a bulk path.
 
 Verified two ways: round-trip (write_binary -> read_binary, pytest
 property cases incl. nulls/empty strings/multi-chunk) and directly
@@ -44,7 +45,6 @@ src/test/lib/import_export/binary/binary_parser_test.cpp.
 
 from __future__ import annotations
 
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -630,63 +630,3 @@ def write_binary(
 def _pack_strings(values: list[str]) -> bytes:
     encoded = [v.encode("utf-8") for v in values]
     return np.asarray([len(e) for e in encoded], dtype="<u8").tobytes() + b"".join(encoded)
-
-
-def load_binary(spark, path: str):
-    """.bin file -> typed Spark DataFrame (schema from the file header,
-    like the .tbl typed-header path — never inferred)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    spark_types = {
-        "int": IntegerType(),
-        "long": LongType(),
-        "float": FloatType(),
-        "double": DoubleType(),
-        "string": StringType(),
-    }
-    table = read_binary(path)
-    schema = StructType(
-        [
-            StructField(n, spark_types[t], nullable)
-            for n, t, nullable in zip(table.names, table.types, table.nullables)
-        ]
-    )
-    rows = list(zip(*table.columns)) if table.columns and table.n_rows else []
-    return spark.createDataFrame(rows, schema)
-
-
-def export_binary(
-    df,
-    path: str,
-    chunk_size: int = 65535,
-    max_rows: int = 100_000,
-    encodings: str | list[str] | None = None,
-) -> None:
-    """DataFrame -> single reference-format .bin (driver-side collect,
-    hard-capped like the .tbl exporter — fixture interchange only)."""
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(f"binary export capped at {max_rows} rows (fixture format); got {n}")
-    back = {"IntegerType()": "int", "LongType()": "long", "FloatType()": "float",
-            "DoubleType()": "double", "StringType()": "string"}
-    types, nullables, names = [], [], []
-    for f in df.schema.fields:
-        key = repr(f.dataType)
-        if key not in back:
-            raise ValueError(f"binary export: unsupported Spark type {f.dataType}")
-        names.append(f.name)
-        types.append(back[key])
-        nullables.append(bool(f.nullable))
-    data = df.collect()
-    columns = [[row[i] for row in data] for i in range(len(names))]
-    write_binary(
-        path, names, types, nullables, columns, chunk_size=chunk_size, encodings=encodings
-    )

@@ -365,87 +365,6 @@ def parquet_segments(
     return files_df.mapInPandas(scan, _PQ_SEGMENTS_SCHEMA)
 
 
-def parquet_segments_accurate(
-    spark: SparkSession, root: str, tables: list[str] | None = None
-) -> DataFrame:
-    """meta_segments_accurate (meta_segments_accurate_table.cpp): the
-    footer surface plus an EXACT per-segment distinct count, computed by
-    reading each row group's column data executor-side (pyarrow
-    read_row_group — only the requested row group's pages are read).
-    Like the reference's full-mode walk this touches data, not just
-    metadata; work is (file, row group)-parallel and shuffle-free.
-    Nested (list/map) columns report NULL distinct counts — the same
-    columns the reference's segment iterables cannot hash."""
-    import pyarrow.parquet as _pq  # noqa: F401  (executor import check)
-
-    files = _list_parquet_files(root, tables)
-    if not files:
-        schema = _PQ_SEGMENTS_SCHEMA.add("distinct_value_count", LongType(), True)
-        return spark.createDataFrame([], schema)
-    files_df = spark.createDataFrame(files, "table_name string, path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    out_schema = StructType(
-        _PQ_SEGMENTS_SCHEMA.fields + [StructField("distinct_value_count", LongType(), True)]
-    )
-
-    def scan(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        cols = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            rows = []
-            for table_name, path in zip(pdf["table_name"], pdf["path"]):
-                import pyarrow as pa
-
-                pf = pq.ParquetFile(path)
-                md = pf.metadata
-                fname = os.path.basename(path)
-                primitive = [
-                    f.name for f in pf.schema_arrow if not pa.types.is_nested(f.type)
-                ]
-                for rg in range(md.num_row_groups):
-                    group = md.row_group(rg)
-                    data = pf.read_row_group(rg, columns=primitive)
-                    for ci in range(group.num_columns):
-                        col = group.column(ci)
-                        stats = col.statistics
-                        null_count = (
-                            stats.null_count
-                            if stats is not None and stats.has_null_count
-                            else None
-                        )
-                        # leaf column chunks map 1:1 to top-level fields
-                        # only for primitive columns; nested leaves get a
-                        # NULL distinct count (non-hashable in general)
-                        distinct = None
-                        if "." not in col.path_in_schema:
-                            arr = data.column(col.path_in_schema)
-                            distinct = len(arr.drop_null().unique())
-                        rows.append(
-                            (
-                                table_name,
-                                fname,
-                                rg,
-                                ci,
-                                col.path_in_schema,
-                                col.physical_type,
-                                ",".join(sorted(set(col.encodings))),
-                                col.compression,
-                                col.num_values,
-                                null_count,
-                                col.total_compressed_size,
-                                col.total_uncompressed_size,
-                                group.num_rows,
-                                distinct,
-                            )
-                        )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files_df.mapInPandas(scan, out_schema)
-
-
 def parquet_chunks(
     spark: SparkSession, root: str, tables: list[str] | None = None
 ) -> DataFrame:

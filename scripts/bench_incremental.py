@@ -42,11 +42,11 @@ CORPUS = os.environ.get("INC_EVAL_CORPUS", "")
 
 
 def main() -> None:
-    # big-corpus runs (INC_EVAL_CORPUS at 2M files) need the scaling
-    # evals' sizing: 24g heap, tmpfs scratch (same as bench_scaling.py)
+    # big-corpus runs (INC_EVAL_CORPUS at 2M files) need a 24g heap and
+    # tmpfs scratch
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    os.makedirs("/dev/shm/spark-local", exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
+    os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
+    os.makedirs(os.environ["SPARK_LOCAL_DIRS"], exist_ok=True)
     spark = get_spark(
         app_name="bench-incremental", master=f"local[{CPUS}]", shuffle_partitions=CPUS * 3
     )

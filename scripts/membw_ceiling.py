@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Memory-bandwidth ceiling microbench for this box (Spark-free).
 
-The trained-classifier scaling probe (scripts/classifier_scaling.py)
+The trained-classifier scaling probe (scripts/scaling.py classifier)
 is partly bandwidth-bound: its featurize/streaming kernels move hundreds
 of MB per pass. This microbench quantifies what the BOX can give such
 kernels when concurrency rises 2 -> 8: each worker process runs an

@@ -124,15 +124,21 @@ def toy_packed(spark):
     return packed
 
 
-def test_weights_bit_match_numpy_twin(toy_packed):
-    w_spark = train_logreg(toy_packed)
+@pytest.fixture(scope="module")
+def toy_weights(toy_packed):
+    # one Spark training run (24 sequential jobs) shared by the toy tests
+    return train_logreg(toy_packed)
+
+
+def test_weights_bit_match_numpy_twin(toy_weights):
+    w_spark = toy_weights
     w_twin = _twin_train(_featurize(_DOCS))
     assert w_spark.shape == w_twin.shape
     assert (w_spark == w_twin).all()  # exact float64 equality, all iters deep
 
 
-def test_scores_bit_match_numpy_twin(toy_packed):
-    w = train_logreg(toy_packed)
+def test_scores_bit_match_numpy_twin(toy_packed, toy_weights):
+    w = toy_weights
     got = {
         r["doc_id"]: (r["label"], r["margin_fp"], r["pred"])
         for r in score_logreg(toy_packed, w).collect()
@@ -141,12 +147,12 @@ def test_scores_bit_match_numpy_twin(toy_packed):
     assert got == exp
 
 
-def test_weak_labels_and_empty_doc_semantics(toy_packed):
+def test_weak_labels_and_empty_doc_semantics(toy_packed, toy_weights):
     rows = {r["doc_id"]: r for r in toy_packed.collect()}
     assert [rows[i]["y"] for i in range(7)] == [1, 1, 0, 0, -1, -1, 1]
     assert rows[5]["fb"] == [] and rows[5]["n_tokens"] == 0
     # Empty doc scores exactly the bias term.
-    w = train_logreg(toy_packed)
+    w = toy_weights
     scored = {r["doc_id"]: r for r in score_logreg(toy_packed, w).collect()}
     assert scored[5]["margin_fp"] == int(np.rint(w[-1] * MARGIN_SCALE))
 

@@ -1,6 +1,6 @@
 """End-to-end corpus-serving journey: the composition a training-data
 user actually runs — dedup pipeline -> retention manifest -> leakage-safe
-split -> served (kept, train) corpus -> deterministic global shuffle —
+split -> served (kept, train) corpus -> packs and stream offsets —
 asserting the global properties each stage promises still hold after
 composition, against the synth generator's dup ground truth."""
 
@@ -15,7 +15,6 @@ from hyrise_generalized_dedup_spark.dedup.pipeline import (
     retention_manifest,
     run_pipeline,
 )
-from hyrise_generalized_dedup_spark.functions.shuffle import shuffle_order
 from hyrise_generalized_dedup_spark.functions.split import assign_split
 from hyrise_generalized_dedup_spark.synth import generate, to_spark
 
@@ -81,23 +80,6 @@ def test_split_fractions_at_cluster_granularity(served):
     assert abs(counts.get("train", 0) / total - 0.8) < 0.12
 
 
-def test_served_shuffle_is_a_deterministic_permutation(served):
-    _, _, served_keys = served
-    base = served_keys.withColumn("doc_id", F.xxhash64("doc_key"))
-    a = shuffle_order(base.repartition(3), seed="serve-v1")
-    b = shuffle_order(base.repartition(11), seed="serve-v1")
-    rows_a = sorted(
-        (r.bucket, r.rank_in_bucket, r.doc_id) for r in a.collect()
-    )
-    rows_b = sorted(
-        (r.bucket, r.rank_in_bucket, r.doc_id) for r in b.collect()
-    )
-    assert rows_a == rows_b  # partitioning-invariant total order
-    n = base.count()
-    assert len({(x[0], x[1]) for x in rows_a}) == n  # a real permutation
-    assert len({x[2] for x in rows_a}) == n
-
-
 # ------------------------------------------------------- serving offsets
 
 
@@ -105,10 +87,7 @@ def test_serving_offsets_are_a_consistent_token_index(spark):
     """global_pos is a permutation of 0..n-1 consistent with
     (bucket, rank); walking docs in global_pos order, each doc's
     global_token_offset is the running token total."""
-    from hyrise_generalized_dedup_spark.functions.shuffle import (
-        serving_offsets,
-        shuffle_order,
-    )
+    from hyrise_generalized_dedup_spark.functions.shuffle import serving_offsets
 
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * (i % 9))) for i in range(300)],
@@ -124,13 +103,6 @@ def test_serving_offsets_are_a_consistent_token_index(spark):
         assert r["global_token_offset"] == acc
         acc += r["srv_n_tokens"]
         assert r["srv_n_tokens"] == r["doc_id"] % 9
-    # consistent with the shuffle primitive's order
-    order = {
-        (r["bucket"], r["rank_in_bucket"]): r["doc_id"]
-        for r in shuffle_order(docs).collect()
-    }
-    for r in out:
-        assert order[(r["srv_bucket"], r["srv_rank"])] == r["doc_id"]
 
 
 def test_serving_offsets_stable_under_repartitioning(spark):
@@ -209,28 +181,3 @@ def test_served_corpus_packs_and_offsets_compose(spark, served):
         last["global_token_offset"] + last["srv_n_tokens"]
         == sum(ptok.values())
     )
-
-
-def test_corpus_shuffle_is_a_permutation(spark, sf_tiny):
-    """Every doc appears exactly once; ranks are 1..n per bucket; the
-    order is reproducible and partitioning-invariant."""
-    from hyrise_generalized_dedup_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_tiny, "documents")
-    out = shuffle_order(docs).collect()
-    assert len(out) == len({r["doc_id"] for r in out}) == docs.count()
-    by_bucket = {}
-    for r in out:
-        by_bucket.setdefault(r["bucket"], []).append(r["rank_in_bucket"])
-    for b, ranks in by_bucket.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), b
-    # reproducible across repartitionings
-    again = shuffle_order(docs.repartition(7)).collect()
-    assert {(r["doc_id"], r["bucket"], r["rank_in_bucket"]) for r in again} == {
-        (r["doc_id"], r["bucket"], r["rank_in_bucket"]) for r in out
-    }
-    # a different seed produces a different order
-    other = shuffle_order(docs, seed="other").collect()
-    assert {(r["doc_id"], r["rank_in_bucket"]) for r in other} != {
-        (r["doc_id"], r["rank_in_bucket"]) for r in out
-    }

@@ -66,6 +66,12 @@ def test_every_registry_query_is_reached():
     assert not stale, f"UNREACHED_KEPT entries that are reached or gone: {stale}"
 
 
+# Output columns of the slots the merged-gate tests already built at
+# sf_tiny: building a gate runs eager work, and the name check below only
+# needs each slot's schema at that scale.
+_TINY_COLUMNS: dict[str, list[str]] = {}
+
+
 @pytest.mark.parametrize("name", sorted(MERGED_GATES) + sorted(JOINED_GATES))
 def test_merged_gate_matches_duckdb(spark, sf_tiny, name):
     qs, os_ = entrymod._all_registries()
@@ -73,11 +79,13 @@ def test_merged_gate_matches_duckdb(spark, sf_tiny, name):
     # those gates at the goldens' scale, recomputing oracles at sf_tiny
     sf = "/root/testdata/sf0.01" if "sf0_01.parquet" in os_[name] else sf_tiny
     df = qs[name](spark, sf)
+    if sf == sf_tiny:
+        _TINY_COLUMNS[name] = df.columns
     ok, msg = compare_to_duckdb(df, os_[name], sf)
     assert ok, f"{name}: {msg}"
 
 
-def test_driver_slot_output_names_unique(spark):
+def test_driver_slot_output_names_unique(spark, sf_tiny):
     """The driver canonicalizes each slot's output through a pandas reindex
     on column labels, which raises on duplicates — the exact failure that
     turned g_text_quality_langid red in round 5 (code_normalized_dedup and
@@ -86,7 +94,8 @@ def test_driver_slot_output_names_unique(spark):
     globally unique, case-insensitive output names."""
     qs, os_ = entrymod._all_registries()
     for name, fn in qs.items():
-        cols = [c.lower() for c in fn(spark, "/root/testdata/sf0.001").columns]
+        built = _TINY_COLUMNS.get(name) or fn(spark, sf_tiny).columns
+        cols = [c.lower() for c in built]
         dupes = sorted({c for c in cols if cols.count(c) > 1})
         assert not dupes, f"{name}: duplicate output columns {dupes}"
 

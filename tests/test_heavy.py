@@ -108,62 +108,3 @@ def test_non_string_column_rejected(spark):
     df = spark.range(10).select(F.col("id").alias("v"))
     with pytest.raises(TypeError, match="string column"):
         mg_candidates(df, "v", capacity=4)
-
-
-def _weighted_exact_topk(rows, k):
-    totals = collections.Counter()
-    for item, w in rows:
-        totals[item] += w
-    ordered = sorted(totals.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    return [(r + 1, item, n) for r, (item, n) in enumerate(ordered)]
-
-
-def test_weighted_matches_brute_force(spark):
-    # token-weighted: a rare-but-huge item must outrank a frequent tiny one
-    rows = [("huge-doc-line", 5000)] + [("tiny-line", 1)] * 300
-    rows += [(f"mid-{i:02d}", 40 - i) for i in range(30) for _ in range(i + 1)]
-    df = spark.createDataFrame(rows, "v string, w long").repartition(5)
-    got = [
-        (r["rank"], r["v"], r["n"])
-        for r in heavy_hitters(df, "v", k=8, capacity=64, weight_col="w").collect()
-    ]
-    assert got == _weighted_exact_topk(rows, 8)
-    assert got[0][1] == "huge-doc-line"  # weight, not occurrence count, ranks
-
-
-def test_weighted_partitioning_invariant(spark):
-    rows = [(f"it-{i % 17:02d}", (i % 7) + 1) for i in range(800)]
-    df = spark.createDataFrame(rows, "v string, w long")
-    a = heavy_hitters(df.repartition(1), "v", k=6, capacity=32, weight_col="w").collect()
-    b = heavy_hitters(df.repartition(9), "v", k=6, capacity=32, weight_col="w").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_weighted_sentinel_carries_total_weight(spark):
-    rows = [("a", 10), ("b", 5), ("a", 1)]
-    df = spark.createDataFrame(rows, "v string, w long").repartition(2)
-    cands = mg_candidates(df, "v", capacity=8, weight_col="w").collect()
-    assert sum(r["est"] for r in cands if r["item"] is None) == 16
-
-
-def test_negative_weight_rejected(spark):
-    df = spark.createDataFrame([("a", 1), ("b", -2)], "v string, w long")
-    with pytest.raises(Exception, match="egative weight"):
-        heavy_hitters(df, "v", k=1, capacity=8, weight_col="w")
-
-
-def test_weighted_randomized_vs_brute(spark):
-    # one large fixed-seed randomized corpus, single Spark job (no
-    # per-example Spark inside hypothesis — too slow); zipf-ish weights
-    import numpy as np
-
-    rng = np.random.default_rng(1234)
-    items = [f"k{rng.integers(0, 120):03d}" for _ in range(5000)]
-    weights = [int(rng.integers(1, 50)) for _ in range(5000)]
-    rows = list(zip(items, weights))
-    df = spark.createDataFrame(rows, "v string, w long").repartition(8)
-    got = [
-        (r["rank"], r["v"], r["n"])
-        for r in heavy_hitters(df, "v", k=12, capacity=256, weight_col="w").collect()
-    ]
-    assert got == _weighted_exact_topk(rows, 12)

@@ -222,49 +222,6 @@ def test_binary_sorted_by_length_mismatch_raises(tmp_path):
         )
 
 
-def test_parquet_segments_accurate_distincts_vs_duckdb(spark, fixture_dir):
-    """Exact per-row-group distinct counts vs a DuckDB file_row_number
-    twin (per-file row-group sizes are fixture constants)."""
-    acc = (
-        M.parquet_segments_accurate(spark, fixture_dir)
-        .orderBy("table_name", "file_name", "chunk_id", "column_id")
-        .toPandas()
-    )
-    # footer columns identical to the plain scan
-    base = (
-        M.parquet_segments(spark, fixture_dir)
-        .orderBy("table_name", "file_name", "chunk_id", "column_id")
-        .toPandas()
-    )
-    for col in base.columns:
-        assert acc[col].tolist() == base[col].tolist()
-    # nested leaf -> NULL distinct; primitives exact vs DuckDB
-    assert acc[acc.column_name == "emb.list.element"]["distinct_value_count"].isna().all()
-    rg_size = {"a0.parquet": 300, "a1.parquet": 200, "b0.parquet": 150}
-    cols_by_file = {
-        "a0.parquet": ["id", "vi", "x", "name"],
-        "a1.parquet": ["id", "vi", "x", "name"],
-        "b0.parquet": ["vec_id", "tag"],
-    }
-    import glob
-
-    for path in glob.glob(f"{fixture_dir}/*/*.parquet"):
-        fname = os.path.basename(path)
-        for col in cols_by_file[fname]:
-            ora = duckdb.sql(
-                f"""
-                SELECT CAST(file_row_number // {rg_size[fname]} AS INT) AS chunk_id,
-                       COUNT(DISTINCT "{col}") AS d
-                FROM read_parquet('{path}', file_row_number=true)
-                GROUP BY 1 ORDER BY 1
-                """
-            ).fetchall()
-            got = acc[(acc.file_name == fname) & (acc.column_name == col)]
-            assert [int(x) for x in got["distinct_value_count"]] == [r[1] for r in ora], (
-                fname, col,
-            )
-
-
 def test_meta_settings_and_system_information(spark):
     s = M.meta_settings(spark)
     assert [f.name for f in s.schema.fields] == ["name", "value", "description"]

@@ -1,10 +1,9 @@
-"""Mixture planning + census-threshold quality pruning
-(functions/mixture.py).
+"""Census-threshold quality pruning (functions/mixture.py).
 
-Oracle strategy: mixture arithmetic is recomputed in plain Python;
-quality_prune is checked against the literal sort-and-take-top-x%
-statement (with the all-ties-kept rule) on planted and randomized
-corpora, plus partitioning invariance and the committed DuckDB oracle.
+Oracle strategy: quality_prune is checked against the literal
+sort-and-take-top-x% statement (with the all-ties-kept rule) on planted
+and randomized corpora, plus partitioning invariance and the committed
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -14,61 +13,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from hyrise_generalized_dedup_spark.functions.mixture import (
-    mixture_plan,
-    quality_prune,
-)
-
-
-def _docs(spark, spec):
-    """spec: {source: [token_count, ...]} -> documents-shaped DF."""
-    rows = []
-    i = 0
-    for src, toks in spec.items():
-        for t in toks:
-            rows.append((i, " ".join(["w"] * t), src))
-            i += 1
-    return spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-
-# --------------------------------------------------------------- mixture_plan
-
-
-def test_mixture_plan_matches_python(spark):
-    spec = {"a": [10, 20, 30], "b": [5] * 8, "c": [100]}
-    weights = {"a": 0.5, "b": 0.25, "c": 0.25}
-    budget = 1000
-    got = {r["source"]: r for r in mixture_plan(_docs(spark, spec), weights, budget).collect()}
-    assert set(got) == set(spec)
-    for src, toks in spec.items():
-        r = got[src]
-        assert r["n_docs"] == len(toks)
-        assert r["n_tokens"] == sum(toks)
-        target = math.floor(weights[src] * budget)
-        assert r["target_tokens"] == target
-        assert r["repeat_factor"] == pytest.approx(target / sum(toks), abs=0)
-        assert r["epochs"] == math.ceil(target / sum(toks))
-        assert r["oversampled"] == (target / sum(toks) > 1.0)
-
-
-def test_mixture_plan_is_a_whitelist(spark):
-    docs = _docs(spark, {"a": [5], "b": [5], "c": [5]})
-    out = mixture_plan(docs, {"a": 0.5, "b": 0.5}, 100).collect()
-    assert sorted(r["source"] for r in out) == ["a", "b"]
-
-
-@pytest.mark.parametrize(
-    "weights,budget",
-    [
-        ({"a": 0.5}, 100),            # doesn't sum to 1
-        ({"a": 1.5, "b": -0.5}, 100),  # negative weight
-        ({"a": 1.0}, 0),              # bad budget
-    ],
-)
-def test_mixture_plan_rejects_bad_specs(spark, weights, budget):
-    docs = _docs(spark, {"a": [5]})
-    with pytest.raises(ValueError):
-        mixture_plan(docs, weights, budget)
+from hyrise_generalized_dedup_spark.functions.mixture import quality_prune
 
 
 # -------------------------------------------------------------- quality_prune

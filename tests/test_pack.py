@@ -19,7 +19,6 @@ from hyrise_generalized_dedup_spark.functions.pack import (
     DEFAULT_SALT,
     greedy_pack,
     pack_census,
-    pack_contexts,
     pack_shard,
     pack_shard_oracle_sql,
     pack_table,
@@ -221,43 +220,6 @@ def test_pack_table_matches_duckdb_recursive_cte(spark, sf_tiny):
     assert got == duck and len(got) > 0
 
 
-# ------------------------------------------------------------- pack_contexts
-
-
-def test_pack_contexts_sha_matches_python(spark):
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} " + " ".join(["w"] * (i % 7))) for i in range(40)]
-        + [(100, None), (101, "")],
-        "doc_id long, text string",
-    )
-    out = pack_contexts(
-        docs, capacity=12, n_shards=2, include_text=True
-    ).collect()
-    # rebuild every pack from the per-doc assignment + raw text
-    assign = pack_table(docs, capacity=12, n_shards=2).collect()
-    text = {r["doc_id"]: r["text"] or "" for r in docs.collect()}
-    groups: dict[tuple, list] = {}
-    for r in assign:
-        groups.setdefault((r["pack_shard"], r["pack_id"]), []).append(r)
-    assert len(out) == len(groups)
-    for row in out:
-        members = sorted(
-            groups[(row["pack_shard"], row["pack_id"])],
-            key=lambda r: r["doc_id"],
-        )
-        want_text = "\n\n".join(text[m["doc_id"]] for m in members)
-        assert row["context_text"] == want_text
-        assert row["context_sha"] == hashlib.sha256(want_text.encode()).hexdigest()
-        assert row["n_docs"] == len(members)
-        assert row["fill_tokens"] == sum(m["pack_n_tokens"] for m in members)
-
-
-def test_pack_contexts_excludes_text_by_default(spark):
-    docs = _toy_docs(spark, n=20)
-    cols = pack_contexts(docs, capacity=30, n_shards=1).columns
-    assert cols == ["pack_shard", "pack_id", "n_docs", "fill_tokens", "context_sha"]
-
-
 # ----------------------------------------------------------------- plan shape
 
 
@@ -275,21 +237,6 @@ def test_pack_plan_text_never_enters_python(spark, sf_tiny):
     assert args and "text#" not in args.group(1), plan
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange hashpartitioning") == 1  # one shuffle total
-
-
-def test_pack_contexts_plan_shape(spark, sf_tiny):
-    """One pandas node (the projected walk); the concat/sha aggregation is
-    a JVM ObjectHashAggregate with a map-side partial; no cartesian."""
-    from hyrise_generalized_dedup_spark.sources.tables import load_table
-
-    df = pack_contexts(load_table(spark, sf_tiny, "documents"), capacity=96, n_shards=8)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("FlatMapGroupsInPandas") == 1
-    assert "partial_collect_list" in final  # map-side combine before the agg exchange
-    assert "CartesianProduct" not in final
-    assert "BroadcastNestedLoopJoin" not in final
 
 
 # --------------------------------------------------------------- pack_census

@@ -115,8 +115,6 @@ import os
 import pytest
 
 from hyrise_generalized_dedup_spark.sources.binary import (
-    export_binary,
-    load_binary,
     read_binary,
     write_binary,
 )
@@ -214,32 +212,6 @@ def test_binary_invalid_files_raise():
         read_binary(f"{_REF_BIN}/InvalidEncodingType.bin")
     with pytest.raises(ValueError):
         read_binary(f"{_REF_BIN}/InvalidAttributeVectorWidth.bin")
-
-
-def test_binary_roundtrip_spark(spark, tmp_path):
-    """write_binary -> load_binary preserves values, NULLs, types, and
-    multi-chunk framing for all five reference column types."""
-    rows = [
-        ("x", 1, 10**12, 1.5, -0.25),
-        (None, -2, None, None, 2.5),
-        ("embedded\nnewline", None, 7, 0.0, None),
-        ("", 4, -1, -3.5, 1e300),
-    ]
-    df = spark.createDataFrame(rows, "a string, b int, c long, d float, e double")
-    p = str(tmp_path / "rt.bin")
-    export_binary(df, p, chunk_size=3)
-    back = load_binary(spark, p)
-    assert back.schema == df.schema
-    assert sorted(map(tuple, back.collect()), key=str) == sorted(map(tuple, df.collect()), key=str)
-
-
-def test_binary_roundtrip_empty_table(spark, tmp_path):
-    df = spark.createDataFrame([], "a string, b int")
-    p = str(tmp_path / "empty.bin")
-    export_binary(df, p)
-    back = load_binary(spark, p)
-    assert back.count() == 0
-    assert back.schema == df.schema
 
 
 def test_binary_gate_matches_duckdb(spark, sf_tiny):
@@ -356,19 +328,6 @@ def test_binary_writer_encoded_roundtrip_property(tmp_path):
     )
     t = read_binary(p)
     assert t.columns == [ints, strs, dbls]
-
-
-def test_binary_export_with_encoding(spark, tmp_path):
-    from hyrise_generalized_dedup_spark.sources.binary import export_binary, load_binary
-
-    df = spark.createDataFrame(
-        [(i % 7, f"v{i % 3}", float(i)) for i in range(50)],
-        "a int, b string, c double",
-    )
-    p = str(tmp_path / "enc_export.bin")
-    export_binary(df, p, chunk_size=16, encodings="dictionary")
-    back = load_binary(spark, p)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_jsonl_corrupt_record_modes(spark, tmp_path):
