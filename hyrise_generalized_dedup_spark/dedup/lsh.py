@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import GDConfig
+from ..session import scratch_dir
 
 # worker-side cache of mmapped signature sideboards (one np.load per
 # worker process per sideboard; the mmap itself is shared page cache)
@@ -141,7 +142,7 @@ def release_candidates(pairs: DataFrame) -> None:
             # it here would make any recompute of the edges lineage (task
             # retry, executor loss, late executor under dynamic allocation)
             # fail unrecoverably. The dir lives until interpreter exit
-            # (atexit hook registered at creation); record it so the
+            # (under the session scratch root); record it so the
             # pipeline summary can surface the retained driver disk.
             try:
                 nbytes = sum(
@@ -329,9 +330,7 @@ def verified_edges(
         # only the batch's rows. On a real multi-node cluster addFile
         # distributes via the driver's file server and executors fetch
         # LAZILY — so the source files must survive past the first
-        # materialization (see release_candidates / the atexit hook).
-        import atexit
-        import tempfile
+        # materialization (see release_candidates).
         import uuid
 
         at = sig.toArrow().combine_chunks()
@@ -352,10 +351,9 @@ def verified_edges(
         # the driver's SparkFiles root, so release_candidates() may
         # delete the tmpdir right after the edges output materializes.
         # On a real cluster executors fetch lazily against the ORIGINAL
-        # path, so the dir must live for the whole session — the atexit
-        # hook below is the only deleter then.
-        tmp = tempfile.mkdtemp(prefix="gd_sideboard_")
-        atexit.register(__import__("shutil").rmtree, tmp, ignore_errors=True)
+        # path, so the dir must live for the whole session — the scratch
+        # root's exit hook is the only deleter then.
+        tmp = scratch_dir("gd_sideboard")
         np.save(os.path.join(tmp, kname), skeys[order], allow_pickle=False)
         np.save(
             os.path.join(tmp, mname),

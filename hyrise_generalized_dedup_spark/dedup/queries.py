@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import GDConfig
 from ..goldens import golden_oracle
+from ..session import barrier
 from ..sources.tables import load_table
 from .gd import dedup_stats, gd_segments
 
@@ -272,28 +273,18 @@ def neardup_cluster_sizes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lsh import band_table, candidate_pairs, verified_edges
     from .minhash import signatures
 
-    import atexit
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "doc_key", F.col("doc_id").cast("string")
     )
     # the gate consumes only the minhash/band columns (LSH + exact
     # verification; no simhash edges here) — skip the simhash pass
     sigs = signatures(docs, CANON_CFG, text_col="text", key_col="doc_key", with_simhash=False)
-    # The gate's result is collected by the driver after this function
-    # returns, so an executor-storage persist could never be released in
-    # time (leak-free-session rule). A TEMP PARQUET checkpoint gives the
-    # same lineage cut without pinning executor storage: the signature
-    # stage would otherwise re-execute once per consumer (band table,
-    # candidate branches, verification sideboard) — it dominated this
-    # gate's wall (bench round-4: most expensive single query). Same
-    # stage-boundary-as-durable-barrier shape the pipeline uses.
-    tmp = tempfile.mkdtemp(prefix="gd_gate_sigs_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    sigs.write.mode("overwrite").parquet(tmp)
-    sigs = spark.read.parquet(tmp)
+    # The band table, the verification sideboard and CC each consume the
+    # signatures; without the barrier the signature stage (this gate's
+    # dominant cost) re-executes once per consumer. A persist could not
+    # be released in time: the driver collects the result after this
+    # function returns (leak-free-session rule).
+    sigs = barrier(sigs, "gd_gate_sigs")
     pairs = candidate_pairs(band_table(sigs), CANON_CFG, persist=False)
     edges = verified_edges(pairs, sigs, CANON_CFG).filter(
         FF.col("jaccard_est") >= CANON_CFG.jaccard_threshold

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..config import GDConfig
+from ..session import barrier
 from .minhash import shingle_hashes, signatures
 from .lsh import band_table
 
@@ -101,19 +102,10 @@ def fuzzy_pairs(
         .select(train_key, eval_key)
         .distinct()
     )
-    # Materialize the candidate set to a per-invocation temp parquet before
-    # counting it: the count gates the join mode, and without the barrier
-    # the full signature passes (the expensive mapInPandas stages) execute
-    # TWICE — once for this count and again when the returned frame is
-    # evaluated. Same durable-barrier pattern as neardup_cluster_sizes.
-    import atexit
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="gd_xcorpus_cands_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    cands.write.mode("overwrite").parquet(tmp)
-    cands = train.sparkSession.read.parquet(tmp)
+    # The count gates the join mode; without the barrier the signature
+    # passes (the expensive mapInPandas stages) run twice — once for the
+    # count and again when the returned frame is evaluated.
+    cands = barrier(cands, "gd_xcorpus_cands")
     n_cands = cands.count()  # parquet footer count — no recompute
     small = n_cands <= _BROADCAST_PAIR_CAP
     maybe_bcast = F.broadcast if small else (lambda df: df)

@@ -96,16 +96,15 @@ def decontaminate_table_bloom(
         .distinct()
         .select(h1c.alias("h1"), h2c.alias("h2"))
     )
-    # One evaluation of the eval subtree instead of two: collect directly
-    # and enforce the driver-collect cap on the collected length (sizes
-    # that would not even fit the collect are caught earlier by
-    # spark.driver.maxResultSize).
-    pdf = eval_hashes.toPandas()
-    n_eval = len(pdf)
-    if n_eval > MAX_EVAL_GRAMS:
+    # One evaluation of the eval subtree, with the collect bounded: one
+    # row past the cap is enough to know the cap is exceeded, so the
+    # driver never holds more than MAX_EVAL_GRAMS + 1 grams.
+    pdf = eval_hashes.limit(MAX_EVAL_GRAMS + 1).toPandas()
+    if len(pdf) > MAX_EVAL_GRAMS:
         raise ValueError(
-            f"eval split has {n_eval} distinct grams > MAX_EVAL_GRAMS "
-            f"({MAX_EVAL_GRAMS}); use the exact decontaminate_table join"
+            f"eval split has more than MAX_EVAL_GRAMS ({MAX_EVAL_GRAMS}) "
+            f"distinct grams (collect stopped at {len(pdf)}); use the exact "
+            f"decontaminate_table join"
         )
     packed, m = build_bloom_bits(
         pdf["h1"].to_numpy(np.int64),

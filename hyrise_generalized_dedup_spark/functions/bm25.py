@@ -10,16 +10,17 @@ Relevance Framework: BM25 and Beyond").
 
 Shape at 10^12 docs — everything is Column expressions, no Python:
 
-1. POSTINGS: lowercase whitespace tokens -> explode -> groupBy
-   (term, doc_id) count. One shuffle, partitioned by term — the
-   layout every later stage reuses. Map-side partial aggregation
-   absorbs in-document repetition before the exchange.
-2. DF CENSUS: postings groupBy term (already term-partitioned, so AQE
-   coalesces without a second wide exchange). ``max_df_frac`` drops
-   terms present in more than that fraction of the corpus BEFORE the
-   candidate join — stopword-grade terms are both the skew hazard
+1. POSTINGS: lowercase whitespace tokens -> explode -> probe the
+   broadcast query-term set map-side -> groupBy (term, doc_id) count.
+   The one corpus-wide shuffle carries only query-term occurrences;
+   map-side partial aggregation absorbs in-document repetition before
+   the exchange.
+2. DF: COUNT(*) over a window partitioned by term on those postings —
+   a query-term-sized exchange, no second corpus pass and no join back.
+   ``max_df_frac`` drops terms present in more than that fraction of the
+   corpus before scoring — stopword-grade terms are both the skew hazard
    (one term -> 10^11 postings) and near-zero idf, so the cap bounds
-   the join fan-out without moving any ranking that matters.
+   the fan-out without moving any ranking that matters.
 3. CANDIDATES: the query term list is tiny (queries x terms rows) ->
    broadcast join against postings. No shuffle of the corpus side.
 4. SCORE: per-(query, doc) contributions folded in SORTED TERM ORDER
@@ -43,7 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 
 __all__ = [
     "doc_tokens",
-    "postings",
+    "query_postings",
     "probe_queries",
     "bm25_match_stats",
     "bm25_topk",
@@ -67,48 +68,19 @@ def doc_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).withColumn("dl", F.size("w").cast("long"))
 
 
-def postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Inverted postings (term, doc_id, tf, dl). The groupBy is the
-    single corpus-wide shuffle of the whole retrieval pipeline; its term
-    partitioning is reused by the df census and the candidate join. The
-    doc length rides along as min(dl) — it is functionally dependent on
-    doc_id, and carrying 8 bytes per posting through the one existing
-    exchange is free compared to the doc_id-keyed corpus-wide join a
-    separate (doc_id, dl) side table would force later."""
-    toks = doc_tokens(docs, text_col)
-    return (
-        toks.select("doc_id", "dl", F.explode("w").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("tf"),
-            F.min("dl").cast("long").alias("dl"),
-        )
-    )
-
-
-def term_df(posts: DataFrame) -> DataFrame:
-    """Document frequency per term from the postings (one row per
-    (term, doc) already, so COUNT(*) is the document count)."""
-    return posts.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-
-
 def query_postings(
     docs: DataFrame, queries: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Postings restricted to the query term set, filtered BEFORE the
-    (term, doc_id) aggregation: the exploded token stream probes the
-    broadcast query-term set map-side, so the one corpus-wide shuffle
-    carries only query-term occurrences instead of every posting in the
-    corpus. tf/dl (and any df computed from the result) for the
-    surviving terms are identical to the full ``postings`` values —
-    dropping other terms cannot change a term's own counts."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """(term, doc_id, tf, dl, df) for the query terms only. The token
+    stream probes the broadcast query-term set BEFORE the (term, doc_id)
+    aggregation, so the corpus-wide shuffle carries only query-term
+    occurrences; dropping other terms cannot change a term's own
+    tf/dl/df. The doc length rides along as min(dl) — it is functionally
+    dependent on doc_id — and df, the term's document count, is a window
+    count over the (one row per (term, doc)) result."""
     qterms = queries.select("term").distinct()
     toks = doc_tokens(docs, text_col)
-    qposts = (
+    return (
         toks.select("doc_id", "dl", F.explode("w").alias("term"))
         .join(F.broadcast(qterms), "term")
         .groupBy("term", "doc_id")
@@ -116,16 +88,10 @@ def query_postings(
             F.count(F.lit(1)).cast("long").alias("tf"),
             F.min("dl").cast("long").alias("dl"),
         )
+        .withColumn(
+            "df", F.count(F.lit(1)).over(Window.partitionBy("term")).cast("long")
+        )
     )
-    # The result is query-term-sized (tiny) but feeds BOTH the df census
-    # and the match join; a per-invocation temp-parquet barrier pins the
-    # corpus tokenize+probe pass to ONE evaluation (same pattern as the
-    # clone census / xcorpus barriers — removed at interpreter exit,
-    # nothing persists across runs).
-    tmp = tempfile.mkdtemp(prefix="gd_bm25_qposts_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    qposts.write.mode("overwrite").parquet(tmp)
-    return docs.sparkSession.read.parquet(tmp)
 
 
 def probe_queries(
@@ -156,17 +122,11 @@ def bm25_match_stats(
     in bm25_topk is a deterministic scalar function of these plus N and
     avgdl. ``max_df_frac`` (0..1] prunes terms with df > frac * N —
     the hot-term skew cap for corpus scale."""
-    # r6: postings restricted to query terms BEFORE the corpus-wide
-    # shuffle (see query_postings) — identical tf/df/dl values, a
-    # corpus-sized exchange replaced by a query-term-sized one.
     posts = query_postings(docs, queries, text_col)
-    dfreq = term_df(posts)
     if max_df_frac is not None:
         n_docs = docs.count()
-        dfreq = dfreq.filter(F.col("df") <= F.lit(float(max_df_frac)) * n_docs)
-    matched = posts.join(F.broadcast(queries), "term").join(
-        F.broadcast(dfreq), "term"
-    )
+        posts = posts.filter(F.col("df") <= F.lit(float(max_df_frac)) * n_docs)
+    matched = posts.join(F.broadcast(queries), "term")
     return matched.groupBy("query_id", "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_match_terms"),
         F.sum("tf").cast("long").alias("sum_tf"),
@@ -193,10 +153,7 @@ def bm25_topk(
     folded in sorted term order so the double is bit-stable under any
     partitioning. N and sum(dl) are one 1-row aggregate (the only
     driver-side collect); avgdl = sum_dl / N in exact-integer inputs."""
-    # r6: postings restricted to query terms BEFORE the corpus-wide
-    # shuffle (see query_postings) — identical tf/df/dl values.
     posts = query_postings(docs, queries, text_col)
-    dfreq = term_df(posts)
 
     stats = doc_tokens(docs, text_col).agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -205,7 +162,7 @@ def bm25_topk(
     avgdl = float(stats["sum_dl"]) / float(n_docs)
 
     if max_df_frac is not None:
-        dfreq = dfreq.filter(F.col("df") <= F.lit(float(max_df_frac)) * n_docs)
+        posts = posts.filter(F.col("df") <= F.lit(float(max_df_frac)) * n_docs)
 
     idf = F.log(
         F.lit(1.0)
@@ -221,7 +178,6 @@ def bm25_topk(
 
     matched = (
         posts.join(F.broadcast(queries), "term")
-        .join(F.broadcast(dfreq), "term")  # dfreq already query-term-only
         .select("query_id", "doc_id", "term", contrib)
     )
     scored = matched.groupBy("query_id", "doc_id").agg(

@@ -842,32 +842,27 @@ def code_clone_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies that formatting-invariant dedup misses; the semantic layer
     (alpha-renamed clones collide, structural edits do not) is oracled
     on the synth code corpus in tests/test_code.py. Scale shape is
-    identical to dedup_exact: one map pass + one groupBy on a 64-hex
-    key. The normalized-sha table is materialized to a per-invocation
-    temp parquet first: it feeds BOTH the census groupBy and the join
-    probe side, and without the barrier the 7-regex canonicalization
-    chain (the dominant cost) executes twice per document (same
-    durable-barrier pattern as neardup_cluster_sizes' signatures)."""
-    import atexit
-    import shutil
-    import tempfile
+    identical to dedup_exact: one map pass + one shuffle on a 64-hex
+    key. Copy count and canonical id are aggregates over a window on
+    clone_sha, so the 7-regex canonicalization chain (the dominant cost)
+    runs once per document with no self-join, and the NULL-key filter
+    keeps the inner join's semantics of the SQL twin."""
+    from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select("doc_id", C.clone_sha(F.col("text")).alias("clone_sha"))
-    tmp = tempfile.mkdtemp(prefix="gd_clone_norm_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    norm.write.mode("overwrite").parquet(tmp)
-    norm = spark.read.parquet(tmp)
-    census = norm.groupBy("clone_sha").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min("doc_id").alias("canonical_doc_id"),
-    )
-    return norm.join(census, "clone_sha").select(
-        "doc_id",
-        "clone_sha",
-        F.col("n_copies").cast("long").alias("n_copies"),
-        F.col("canonical_doc_id").cast("long").alias("canonical_doc_id"),
-        (F.col("doc_id") != F.col("canonical_doc_id")).cast("int").alias("is_dup"),
+    w = Window.partitionBy("clone_sha")
+    return (
+        norm.filter(F.col("clone_sha").isNotNull())
+        .select(
+            "doc_id",
+            "clone_sha",
+            F.count(F.lit(1)).over(w).cast("long").alias("n_copies"),
+            F.min("doc_id").over(w).cast("long").alias("canonical_doc_id"),
+        )
+        .withColumn(
+            "is_dup", (F.col("doc_id") != F.col("canonical_doc_id")).cast("int")
+        )
     )
 
 

@@ -9,13 +9,56 @@ shuffle partitions sized to the parallelism level instead of the
 At 100 TB on a real cluster the same builder is used from
 ``spark-submit --py-files``; only ``master`` / ``shuffle_partitions``
 change (see BENCH/BASELINE.md scaling protocol).
+
+Every temp dir the engine makes lives under one per-process scratch
+root (``scratch_dir``), removed by one exit hook; ``barrier`` is the one
+Parquet materialization built on it.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_scratch_root: str | None = None
+_scratch_lock = threading.Lock()  # callers may run on driver-side thread pools
+
+
+def scratch_dir(tag: str) -> str:
+    """A new empty dir named ``<tag>_*`` under this process's scratch
+    root. The root (``gd_scratch_*`` in the system temp dir) is made on
+    first use and removed with everything under it when the interpreter
+    exits; a caller that is done with its dir earlier may delete it."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="gd_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_scratch_root)
+
+
+def barrier(df: DataFrame, tag: str) -> DataFrame:
+    """``df`` written as Parquet to a ``scratch_dir(tag)`` and read back:
+    a lineage cut so that consumers of the result share one evaluation
+    of ``df`` instead of each recomputing it.
+
+    Eager: the write is a Spark job that runs when this is called, so a
+    plan-building function that uses it runs that job before it returns.
+
+    The data lives until the interpreter exits, not until the last
+    consumer is done: a registry query's result is collected after the
+    query function has returned, so nothing inside it can know when the
+    files are dead. Use it only where the intermediate is read more than
+    once and a plan rewrite (e.g. a window instead of a self-join) cannot
+    remove the second read."""
+    path = scratch_dir(tag)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

@@ -133,11 +133,10 @@ def write_csv_meta(df: DataFrame, path: str) -> None:
     }
     with open(path + ".json", "w") as fh:
         _json.dump(meta, fh, indent=4, sort_keys=True)
-    tmp = tempfile.mkdtemp(prefix="csv_export_")
-    df.coalesce(1).write.mode("overwrite").csv(tmp, nullValue="null", quote='"', escape='"')
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    shutil.move(part, path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="csv_export_") as tmp:
+        df.coalesce(1).write.mode("overwrite").csv(tmp, nullValue="null", quote='"', escape='"')
+        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
+        shutil.move(part, path)
 
 
 _TBL_EXPORT_MAX_ROWS = 100_000

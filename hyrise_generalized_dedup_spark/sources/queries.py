@@ -3,10 +3,11 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import scratch_dir
 
 
 def q_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -24,7 +25,7 @@ def q_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .icetable import append, create_table, incremental_scan, read_table
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    root = os.path.join(tempfile.mkdtemp(prefix="gd_ice_"), "docs_table")
+    root = os.path.join(scratch_dir("gd_ice"), "docs_table")
     s1 = create_table(spark, root, docs.filter(F.col("doc_id") % 3 != 0))
     append(spark, root, docs.filter(F.col("doc_id") % 3 == 0))
 
@@ -70,7 +71,7 @@ def q_iceberg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .icetable import create_table, overwrite, snapshot_diff
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    root = os.path.join(tempfile.mkdtemp(prefix="gd_icediff_"), "docs_table")
+    root = os.path.join(scratch_dir("gd_icediff"), "docs_table")
     s1 = create_table(spark, root, docs.filter(F.col("doc_id") % 3 != 0))
     new = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
         "text",
@@ -141,7 +142,7 @@ def q_iceberg_pruned_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = docs.select(
         "doc_id", "n_chars", F.sha2(F.col("text"), 256).alias("sha")
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="gd_icepr_"), "docs_table")
+    root = os.path.join(scratch_dir("gd_icepr"), "docs_table")
     create_table(
         spark, root, keyed.repartitionByRange(8, "doc_id"),
         stat_cols=["doc_id", "n_chars"], bloom_cols=["sha"],
@@ -302,11 +303,9 @@ def q_meta_segments_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the byte-level layout documented in sources/binary.py (the
     advisor's closed-form formulas reproduce every size —
     tests/test_meta.py pins that)."""
-    import tempfile
-
     from .meta import meta_segments_binary
 
-    path = os.path.join(tempfile.mkdtemp(prefix="gd_bmeta_"), "fixture.bin")
+    path = os.path.join(scratch_dir("gd_bmeta"), "fixture.bin")
     _write_bmeta_fixture(path)
     return meta_segments_binary(spark, {"fixture": path}).orderBy(
         "chunk_id", "column_id"

@@ -26,9 +26,6 @@ time.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -37,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .events import bounded_stream, run_available_now
 
 DOCS_SCHEMA = StructType(
     [
@@ -101,45 +100,16 @@ def first_seen(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bounded_source(spark: SparkSession, docs_path: str) -> tuple[str, int]:
-    """Symlink a documents parquet (file or dir) into a stream-source
-    dir and append a far-future sentinel doc that pushes the watermark
-    past every real window (the bounded-stream flush, same as
-    events.run_stream_batch). Returns (src_dir, sentinel_doc_id)."""
-    src_dir = tempfile.mkdtemp(prefix="docs_stream_")
-    docs_path = os.path.abspath(docs_path)
-    if os.path.isdir(docs_path):
-        # Spark-written parquet is a directory; the file stream source
-        # does not recurse into symlinked subdirectories, so expose the
-        # part files themselves.
-        for i, name in enumerate(sorted(os.listdir(docs_path))):
-            if name.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(docs_path, name),
-                    os.path.join(src_dir, f"part_{i:05d}.parquet"),
-                )
-    else:
-        os.symlink(docs_path, os.path.join(src_dir, "documents.parquet"))
+def _bounded_stream(spark: SparkSession, docs_path: str) -> tuple[DataFrame, int]:
+    """Stream over a documents parquet (file or dir) with a sentinel doc
+    a week past the last one (events.bounded_stream). Returns
+    (stream, sentinel_doc_id)."""
     max_id = spark.read.parquet(docs_path).agg(F.max("doc_id")).collect()[0][0]
-    sentinel_id = int(max_id) + 7 * 24 * 3600  # a week past the last doc
-    spark.createDataFrame(
+    sentinel_id = int(max_id) + 7 * 24 * 3600
+    sentinel = spark.createDataFrame(
         [(sentinel_id, "__flush__", "xx", "__flush__", 9)], DOCS_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-    return src_dir, sentinel_id
-
-
-def _run_stream(agg: DataFrame, mode: str) -> DataFrame:
-    out_dir = tempfile.mkdtemp(prefix="docs_stream_out_")
-    q = (
-        agg.writeStream.outputMode(mode)
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "result"))
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return agg.sparkSession.read.parquet(os.path.join(out_dir, "result"))
+    return bounded_stream(docs_path, sentinel), sentinel_id
 
 
 def run_census_stream(
@@ -147,14 +117,12 @@ def run_census_stream(
 ) -> DataFrame:
     """Drive dedup_census over the bounded documents source
     (availableNow, parquet sink — nothing through the driver)."""
-    src_dir, sentinel_id = _bounded_source(spark, docs_path)
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(src_dir)
-    out = _run_stream(dedup_census(stream, window), "append")
+    stream, sentinel_id = _bounded_stream(spark, docs_path)
+    out = run_available_now(dedup_census(stream, window))
     return out.filter(F.col("canonical_doc_id") != sentinel_id)
 
 
 def run_first_seen_stream(spark: SparkSession, docs_path: str) -> DataFrame:
-    src_dir, sentinel_id = _bounded_source(spark, docs_path)
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(src_dir)
-    out = _run_stream(first_seen(stream), "append")
+    stream, sentinel_id = _bounded_stream(spark, docs_path)
+    out = run_available_now(first_seen(stream))
     return out.filter(F.col("doc_id") != sentinel_id)

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampNTZType,
 )
+
+from ..session import scratch_dir
 
 EVENTS_SCHEMA = StructType(
     [
@@ -61,29 +62,57 @@ def windowed_aggregation(events: DataFrame, window: str = "5 minutes") -> DataFr
     )
 
 
+def bounded_stream(path: str, sentinel: DataFrame) -> DataFrame:
+    """A file stream, with ``sentinel``'s schema, over a parquet file or
+    Spark-written parquet dir (symlinks in a scratch dir; the data is not
+    copied) plus ``sentinel``: far-future rows that push the watermark
+    past every real window — the bounded-stream flush. The sentinel's own
+    window stays open and is never emitted; callers still filter its
+    marker from the result as defense in depth."""
+    src_dir = scratch_dir("gd_stream_src")
+    path = os.path.abspath(path)
+    if os.path.isdir(path):
+        # the file stream source does not recurse into symlinked
+        # subdirectories, so expose the part files themselves
+        for i, name in enumerate(sorted(os.listdir(path))):
+            if name.endswith(".parquet"):
+                os.symlink(
+                    os.path.join(path, name),
+                    os.path.join(src_dir, f"part_{i:05d}.parquet"),
+                )
+    else:
+        os.symlink(path, os.path.join(src_dir, os.path.basename(path)))
+    sentinel.coalesce(1).write.mode("append").parquet(src_dir)
+    return sentinel.sparkSession.readStream.schema(sentinel.schema).parquet(src_dir)
+
+
+def run_available_now(agg: DataFrame) -> DataFrame:
+    """Run a streaming query to completion (availableNow trigger) into an
+    append-mode parquet sink in a scratch dir and return the result read
+    back. The result never flows through the driver: a memory sink plus
+    collect() caps the stream at driver heap, while a file sink is the
+    shape that scales to a real cluster. Append mode emits only windows
+    the watermark has passed, hence ``bounded_stream``'s sentinel."""
+    out_dir = scratch_dir("gd_stream_out")
+    q = (
+        agg.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", os.path.join(out_dir, "result"))
+        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return agg.sparkSession.read.parquet(os.path.join(out_dir, "result"))
+
+
 def run_stream_batch(
     spark: SparkSession, sf_dir: str, window: str = "5 minutes"
 ) -> DataFrame:
     """Drive the streaming query over the bounded parquet source to
     completion (availableNow) and return the result as a DataFrame."""
-    # the file stream source requires a directory; expose the single
-    # parquet file through a temp symlink dir (read-only testdata)
-    src_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), os.path.join(src_dir, "events.parquet"))
-
-    # parquet sink + read-back: the result never flows through the driver
-    # (a memory sink + collect() caps the stream at driver heap; a file
-    # sink is the shape that scales to a real cluster and is exactly how
-    # the batch pipeline checkpoints stages). The parquet sink requires
-    # append mode, which only emits windows the WATERMARK has passed — on
-    # a bounded source the last 10 minutes of windows would stay open
-    # forever. A single far-future sentinel row pushes the watermark past
-    # every real window (the standard bounded-stream flush); its own
-    # window stays open and is never emitted, and its event_type marker is
-    # filtered from the read-back as defense in depth.
-    max_ts = (
-        spark.read.parquet(f"{sf_dir}/events.parquet").agg(F.max("ts")).collect()[0][0]
-    )
+    path = f"{sf_dir}/events.parquet"
+    max_ts = spark.read.parquet(path).agg(F.max("ts")).collect()[0][0]
     if max_ts is None:
         # empty bounded source: nothing to flush, nothing to aggregate —
         # return an empty frame with the aggregation schema instead of
@@ -96,20 +125,5 @@ def run_stream_batch(
         [(int(-1), max_ts + datetime.timedelta(days=2), int(-1), "__flush__", 0.0, "{}")],
         EVENTS_SCHEMA,
     )
-    sentinel.coalesce(1).write.mode("append").parquet(src_dir)
-
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
-    agg = windowed_aggregation(stream, window)
-    out_dir = tempfile.mkdtemp(prefix="events_stream_out_")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "result"))
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(os.path.join(out_dir, "result")).filter(
-        F.col("event_type") != "__flush__"
-    )
+    out = run_available_now(windowed_aggregation(bounded_stream(path, sentinel), window))
+    return out.filter(F.col("event_type") != "__flush__")

@@ -3,6 +3,8 @@ join path, bounded false positives, vectorized probe (functions/bloom.py)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -109,8 +111,11 @@ def test_cap_guard_raises(spark, monkeypatch):
 
     monkeypatch.setattr(B, "MAX_EVAL_GRAMS", 2)
     docs = _corpus(spark, with_overlap=False)
-    with pytest.raises(ValueError, match="MAX_EVAL_GRAMS"):
+    with pytest.raises(ValueError, match="MAX_EVAL_GRAMS") as err:
         B.decontaminate_table_bloom(docs)
+    # the collect is bounded: no gram count past cap + 1 ever reaches the
+    # driver (the eval split has 108 distinct 5-grams)
+    assert max(int(n) for n in re.findall(r"\d+", str(err.value))) <= 3
     assert MAX_EVAL_GRAMS > 1_000_000  # the real cap is corpus-scale
 
 

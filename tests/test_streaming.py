@@ -7,7 +7,7 @@ import pyspark.sql.functions as F
 from hyrise_generalized_dedup_spark.streaming.events import run_stream_batch
 
 
-def test_session_window_stream_equals_batch_sessionize(spark, sf_tiny):
+def test_session_window_stream_equals_batch_sessionize(spark, sf_tiny, tmp_path):
     """The streaming session_window operator and the batch lag/cumsum
     sessionizer implement the same gap definition."""
     import uuid
@@ -23,11 +23,9 @@ def test_session_window_stream_equals_batch_sessionize(spark, sf_tiny):
     b = sorted((r.user_id, str(r.session_start), r.n_events) for r in batch.collect())
 
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="sess_stream_")
-    os.symlink(os.path.abspath(f"{sf_tiny}/events.parquet"), os.path.join(d, "e.parquet"))
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(d)
+    os.symlink(os.path.abspath(f"{sf_tiny}/events.parquet"), tmp_path / "e.parquet")
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(str(tmp_path))
     agg = sessionize_stream(stream, 30)
     name = f"sess_{uuid.uuid4().hex[:8]}"
     q = (
