@@ -26,28 +26,30 @@ from hyrise_generalized_dedup_spark.plans import (  # noqa: E402
 
 
 def _full_registries() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]]:
-    """Every individual query/oracle across all modules (pytest surface)."""
+    """Every individual query/oracle across all modules (pytest surface).
+
+    A registry module that fails to import raises here rather than
+    silently taking its queries off the driver surface."""
+    from hyrise_generalized_dedup_spark.ann.queries import ANN_ORACLES, ANN_QUERIES
+    from hyrise_generalized_dedup_spark.dedup.queries import DEDUP_ORACLES, DEDUP_QUERIES
+    from hyrise_generalized_dedup_spark.functions.queries import TEXT_ORACLES, TEXT_QUERIES
+    from hyrise_generalized_dedup_spark.sources.queries import SOURCE_ORACLES, SOURCE_QUERIES
+    from hyrise_generalized_dedup_spark.stats.queries import STATS_ORACLES, STATS_QUERIES
+    from hyrise_generalized_dedup_spark.streaming.queries import STREAM_ORACLES, STREAM_QUERIES
+
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
-    queries.update(RELATIONAL_QUERIES)
-    oracles.update(RELATIONAL_ORACLES)
-
-    # Optional registries — added as modules land; import-gated so a broken
-    # module never takes down the whole contract.
-    for modpath, qname, oname in [
-        ("hyrise_generalized_dedup_spark.dedup.queries", "DEDUP_QUERIES", "DEDUP_ORACLES"),
-        ("hyrise_generalized_dedup_spark.functions.queries", "TEXT_QUERIES", "TEXT_ORACLES"),
-        ("hyrise_generalized_dedup_spark.ann.queries", "ANN_QUERIES", "ANN_ORACLES"),
-        ("hyrise_generalized_dedup_spark.streaming.queries", "STREAM_QUERIES", "STREAM_ORACLES"),
-        ("hyrise_generalized_dedup_spark.sources.queries", "SOURCE_QUERIES", "SOURCE_ORACLES"),
-        ("hyrise_generalized_dedup_spark.stats.queries", "STATS_QUERIES", "STATS_ORACLES"),
+    for qs, os_ in [
+        (RELATIONAL_QUERIES, RELATIONAL_ORACLES),
+        (DEDUP_QUERIES, DEDUP_ORACLES),
+        (TEXT_QUERIES, TEXT_ORACLES),
+        (ANN_QUERIES, ANN_ORACLES),
+        (STREAM_QUERIES, STREAM_ORACLES),
+        (SOURCE_QUERIES, SOURCE_ORACLES),
+        (STATS_QUERIES, STATS_ORACLES),
     ]:
-        try:
-            mod = __import__(modpath, fromlist=[qname, oname])
-            queries.update(getattr(mod, qname))
-            oracles.update(getattr(mod, oname))
-        except ImportError:
-            pass
+        queries.update(qs)
+        oracles.update(os_)
     return queries, oracles
 
 

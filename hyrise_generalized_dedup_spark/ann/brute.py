@@ -18,10 +18,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 
-def _to_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Left-fold dot product in double (bit-deterministic)."""
     return F.aggregate(

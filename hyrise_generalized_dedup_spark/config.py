@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -30,8 +30,7 @@ class GDConfig:
     bands: int = 32               # LSH bands; rows_per_band = num_hashes // bands
     jaccard_threshold: float = 0.7
 
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit fingerprints, dedup/simhash.py SIMHASH_BITS) ---
     simhash_hamming_max: int = 3
     simhash_blocks: int = 4       # hamming<=3 guaranteed found by 4-block keying
 
@@ -49,7 +48,6 @@ class GDConfig:
     # visible in the edges table rather than silent. 256^2/2 = 32k pairs
     # is the max per-bucket join output.
     hot_band_threshold: int = 256
-    salt_buckets: int = 16
     # Star edges get a RELAXED verification floor (fraction of the
     # jaccard threshold) instead of bypassing verification entirely: a
     # lone doc that collides on a single band with a vendored-library

@@ -22,9 +22,23 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .lsh import hard_unpersist
-
 log = logging.getLogger(__name__)
+
+
+def hard_unpersist(df: DataFrame) -> None:
+    """Release a DataFrame's storage whether it came from .persist() or
+    .localCheckpoint().
+
+    Dataset.unpersist() goes through the CacheManager, which does NOT
+    track a localCheckpoint's underlying RDD — the checkpoint data stays
+    in the persistent-RDD map forever (measured: CC's label checkpoints
+    survived df.unpersist()). For checkpointed frames the analyzed plan
+    is a LogicalRDD whose wrapped RDD must be unpersisted directly."""
+    df.unpersist()
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:  # not a LogicalRDD (plain cached plan) — done above
+        pass
 
 
 def _min_label_components(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
@@ -139,7 +153,6 @@ def connected_components(
                     .join(result, key_col, "left")
                     .withColumn("cluster_id", F.coalesce("cluster_id", F.col(key_col)))
                 )
-            result._gd_persisted = None  # nothing pinned on this path
             return result
         log.info(
             "connected_components: edge count exceeds driver budget %d — "
@@ -214,8 +227,7 @@ def connected_components(
             .join(result, key_col, "left")
             .withColumn("cluster_id", F.coalesce("cluster_id", F.col(key_col)))
         )
-    # the final label checkpoint IS the result's lineage; callers that
-    # materialize the result (checkpoint write / collect) release it via
-    # lsh.release_candidates(result)
-    result._gd_persisted = prev_ckpt
+    # the final label checkpoint IS the result's lineage, so it stays
+    # pinned; the pipeline's clusters stage frees it once the result is
+    # written (pipeline.run_stage)
     return result

@@ -216,18 +216,6 @@ def gd_segments(
     return df.select(*key_cols, content_col).mapInPandas(transform, out_schema)
 
 
-def base_table(segments: DataFrame) -> DataFrame:
-    """The deduplicated base table — the GD analog of the dictionary
-    (dictionary_encoder.hpp:61-88: sort + std::unique). Spark: groupBy
-    fingerprint; partial aggregation combines duplicates map-side, so hot
-    bases (the whole point of dedup) don't create reducer skew."""
-    return segments.groupBy("base_fp").agg(
-        F.first("base").alias("base"),
-        F.count(F.lit(1)).alias("ref_count"),
-        F.first("seg_len").alias("seg_len"),
-    )
-
-
 def dedup_stats(segments: DataFrame) -> DataFrame:
     """Corpus-level dedup metrics (memory-accounting analog:
     AbstractSegment::memory_usage / MemoryUsageCalculationMode,

@@ -53,9 +53,9 @@ from .metrics import MetricsCollector
 from .pipeline import (
     STAGES,
     Checkpointer,
-    build_candidates,
-    build_clusters,
-    build_edges,
+    candidate_table,
+    cluster_table,
+    edge_table,
     gd_table,
     prepare_docs,
     rep_table,
@@ -175,17 +175,13 @@ def incremental_update(
                 name, alive if new_rows is None else alive.unionByName(new_rows)
             )
 
-        segments = stage(
-            "gd", lambda write: write(gd_table(new_docs, cfg) if n_new else None), per_doc
-        )
+        segments = stage("gd", lambda: gd_table(new_docs, cfg) if n_new else None, per_doc)
         sigs = stage(
-            "signatures",
-            lambda write: write(signature_table(new_docs, cfg) if n_new else None),
-            per_doc,
+            "signatures", lambda: signature_table(new_docs, cfg) if n_new else None, per_doc
         )
-        rep_map = stage("reps", lambda write: write(rep_table(sigs)))
+        rep_map = stage("reps", lambda: rep_table(sigs))
         rep_sigs, exact_edges = split_reps(rep_map)
-        pairs = stage("candidates", lambda write: build_candidates(rep_sigs, cfg, write))
+        pairs = stage("candidates", lambda: candidate_table(rep_sigs, cfg))
 
         # Prior pairs that are candidates again keep their prior outcome. Every
         # prior LSH edge comes from a prior pair with the same key, so semi-
@@ -200,21 +196,15 @@ def incremental_update(
             .drop("is_star")
         )
         edges = stage(
-            "edges",
-            lambda write: build_edges(
-                todo, rep_sigs, exact_edges, cfg, lambda df: write(reused.unionByName(df))
-            ),
+            "edges", lambda: reused.unionByName(edge_table(todo, rep_sigs, exact_edges, cfg))
         )
-        clusters = stage(
-            "clusters", lambda write: build_clusters(edges, docs, n_docs, cfg, write)
-        )
+        clusters = stage("clusters", lambda: cluster_table(edges, docs, n_docs, cfg))
 
         suffix, jobs = None, {"n_reused_lsh_edges": reused.count}
         if with_suffix_stage:
             suffix_reused, dirty_docs = _clean_split(ckpt, clusters, docs)
             suffix = stage(
-                "suffix",
-                lambda write: write(suffix_reused.unionByName(suffix_edges(dirty_docs, cfg))),
+                "suffix", lambda: suffix_reused.unionByName(suffix_edges(dirty_docs, cfg))
             )
             jobs["n_dirty_clusters"] = lambda: dirty_docs.select("cluster_id").distinct().count()
         else:

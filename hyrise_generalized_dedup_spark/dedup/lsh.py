@@ -11,25 +11,26 @@ JoinHash, join_hash.cpp:58-80, is the single-node version of "make each
 build side fit" — here we bound per-bucket join output instead):
 
 1. band table: posexplode of the per-doc band-hash array (JVM-side).
-2. bucket census: groupBy(band_id, band_hash).count() — map-side partial
-   agg, cheap. Buckets with count > hot_band_threshold are "hot".
+2. bucket census: groupBy(band_id, band_hash) -> (count, min key) —
+   map-side partial agg, cheap — joined back to the band table. Buckets
+   with count > hot_band_threshold are "hot".
 3. cold buckets: hash self-join on (band_id, band_hash) with key_a < key_b
    -> all candidate pairs (the LSH semantics).
-4. hot buckets: star edges — every member joins to the bucket's minimum
-   key (window min, one shuffle) -> O(m) edges, cluster-equivalent to the
-   O(m^2) clique for connected components, diameter 2 instead of 1.
-5. the hot-key list is tiny -> broadcast to route rows (no second shuffle
-   of the band table).
+4. hot buckets: star edges — every member pairs with the census's
+   bucket-min key -> O(m) edges, cluster-equivalent to the O(m^2) clique
+   for connected components, diameter 2 instead of 1.
 
-Candidate verification happens downstream in JVM code only:
-signature-estimated Jaccard via zip_with/aggregate — no Python in the
-pair path (pairs >> docs).
+The candidate table is one plan with no cache (candidate_pairs).
+
+Verification (verified_edges) estimates Jaccard from the signatures in a
+numpy kernel over Arrow batches (mapInPandas): per batch, the pair keys
+gather their signature rows from an mmapped sideboard and compare all
+num_hashes positions at once.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -40,21 +41,6 @@ from ..session import scratch_dir
 # worker-side cache of mmapped signature sideboards (one np.load per
 # worker process per sideboard; the mmap itself is shared page cache)
 _SIDEBOARD_CACHE: dict = {}
-
-# Driver-side registry of sideboard source dirs that could NOT be deleted
-# at release time (non-local masters fetch addFile sources lazily, so the
-# original path must survive for the whole session). The pipeline summary
-# reports these so long-lived multi-run sessions see the retained disk
-# instead of accumulating it silently.
-_RETAINED_SIDEBOARD_DIRS: list = []
-
-
-def retained_sideboard_dirs() -> list:
-    """Sideboard source dirs retained until interpreter exit (non-local
-    masters only; local-mode dirs are deleted eagerly). Each entry is
-    ``(path, bytes)``."""
-    return list(_RETAINED_SIDEBOARD_DIRS)
-
 
 def _load_sideboard(kname: str, mname: str):
     import numpy as np
@@ -101,65 +87,12 @@ def _heap_bytes(spark) -> int:
     return int(raw)
 
 
-def hard_unpersist(df: DataFrame) -> None:
-    """Release a DataFrame's storage whether it came from .persist() or
-    .localCheckpoint().
-
-    Dataset.unpersist() goes through the CacheManager, which does NOT
-    track a localCheckpoint's underlying RDD — the checkpoint data stays
-    in the persistent-RDD map forever (measured: CC's label checkpoints
-    survived df.unpersist()). For checkpointed frames the analyzed plan
-    is a LogicalRDD whose wrapped RDD must be unpersisted directly."""
-    df.unpersist()
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # not a LogicalRDD (plain cached plan) — done above
-        pass
-
-
-def release_candidates(pairs: DataFrame) -> None:
-    """Unpersist the intermediate frame a producer attached to its output
-    (candidate_pairs' annotated band table, connected_components' final
-    label checkpoint).
-
-    Call AFTER the output (or anything derived from it) has been
-    materialized — e.g. after the pipeline's checkpoint write. Without
-    this every invocation pins executor storage until session end."""
-    cached = getattr(pairs, "_gd_persisted", None)
-    if cached is not None:
-        hard_unpersist(cached)
-    side = getattr(pairs, "_gd_sideboard_dir", None)
-    if side is not None:  # verified_edges' mmapped signature sideboard
-        if getattr(pairs, "_gd_sideboard_eager", False):
-            # local mode: addFile copied the files eagerly into the
-            # driver's SparkFiles root, so the source dir is dead weight
-            import shutil
-
-            shutil.rmtree(side, ignore_errors=True)
-        else:
-            # non-local: executors fetch addFile sources LAZILY from the
-            # driver's file server, re-reading the ORIGINAL path — deleting
-            # it here would make any recompute of the edges lineage (task
-            # retry, executor loss, late executor under dynamic allocation)
-            # fail unrecoverably. The dir lives until interpreter exit
-            # (under the session scratch root); record it so the
-            # pipeline summary can surface the retained driver disk.
-            try:
-                nbytes = sum(
-                    os.path.getsize(os.path.join(side, f)) for f in os.listdir(side)
-                )
-            except OSError:
-                nbytes = 0
-            _RETAINED_SIDEBOARD_DIRS.append((side, nbytes))
-
-
 def candidate_pairs(
     bands: DataFrame,
     cfg: GDConfig,
     key_col: str = "doc_key",
-    persist: bool = True,
 ) -> DataFrame:
-    """-> (key_a, key_b, n_shared_bands) candidate pairs, skew-safe.
+    """-> (key_a, key_b, n_shared_bands, is_star) candidate pairs, skew-safe.
 
     Census shape matters at 10^12 rows: a window over
     (band_id, band_hash) would materialize every bucket inside a single
@@ -168,19 +101,18 @@ def candidate_pairs(
     rows inside every upstream partition first — the built-in equivalent
     of salting the hot key across partitions) joined back to the band
     table; AQE skew-join splits the join's hot side if one bucket
-    dominates a partition. The annotated table is persisted so the hot
-    branch and both sides of the cold self-join reuse one
-    materialization; callers that materialize the output (checkpoint
-    write) must follow with release_candidates() — one-shot callers that
-    can't (driver gates whose result is collected after return) pass
-    persist=False and trade a recompute for a leak-free session."""
+    dominates a partition.
+
+    Nothing is cached, so nothing outlives the caller's action. The three
+    reads of the annotated table share one plan, where Spark writes the
+    band-table exchange once and the count census once for both sides of
+    the cold self-join; column pruning gives the hot branch its own
+    census, the one that also carries the bucket minimum."""
     census = bands.groupBy("band_id", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_n"),
         F.min(key_col).alias("bucket_min"),
     )
     annotated = bands.join(census, ["band_id", "band_hash"])
-    if persist:
-        annotated = annotated.persist()
 
     cold = annotated.filter(F.col("bucket_n") <= cfg.hot_band_threshold)
     a = cold.select("band_id", "band_hash", F.col(key_col).alias("key_a"))
@@ -203,7 +135,7 @@ def candidate_pairs(
         .withColumn("is_star", F.lit(1))
     )
 
-    out = (
+    return (
         cold_pairs.select("key_a", "key_b")
         .withColumn("is_star", F.lit(0))
         .unionByName(hot_pairs)
@@ -213,9 +145,6 @@ def candidate_pairs(
             F.max("is_star").alias("is_star"),
         )
     )
-    if persist:
-        out._gd_persisted = annotated  # released via release_candidates()
-    return out
 
 
 def verified_edges(
@@ -329,8 +258,10 @@ def verified_edges(
         # across all workers on the node, and fancy-indexed gathers copy
         # only the batch's rows. On a real multi-node cluster addFile
         # distributes via the driver's file server and executors fetch
-        # LAZILY — so the source files must survive past the first
-        # materialization (see release_candidates).
+        # LAZILY from the original path, so any recompute of the edges
+        # lineage (task retry, executor loss) needs the source files: they
+        # stay under the scratch root until interpreter exit, on every
+        # master.
         import uuid
 
         at = sig.toArrow().combine_chunks()
@@ -347,12 +278,6 @@ def verified_edges(
         sc = signatures.sparkSession.sparkContext
         tag = uuid.uuid4().hex[:12]
         kname, mname = f"gd_sidekeys_{tag}.npy", f"gd_sidemat_{tag}.npy"
-        # Source-file lifetime: in local mode addFile copies eagerly into
-        # the driver's SparkFiles root, so release_candidates() may
-        # delete the tmpdir right after the edges output materializes.
-        # On a real cluster executors fetch lazily against the ORIGINAL
-        # path, so the dir must live for the whole session — the scratch
-        # root's exit hook is the only deleter then.
         tmp = scratch_dir("gd_sideboard")
         np.save(os.path.join(tmp, kname), skeys[order], allow_pickle=False)
         np.save(
@@ -377,17 +302,9 @@ def verified_edges(
                 if out is not None:
                     yield out
 
-        result = pairs.select("key_a", "key_b", star_col).mapInPandas(
+        return pairs.select("key_a", "key_b", star_col).mapInPandas(
             verify_gather, out_schema
         )
-        result._gd_sideboard_dir = tmp  # removed via release_candidates()
-        # Eager-copy (delete-after-materialize-safe) only for true local
-        # masters: `local` / `local[k]` / `local[*]`. A prefix match would
-        # also catch `local-cluster[...]`, whose executors are separate
-        # processes that fetch addFile sources LAZILY — deleting the
-        # source dir there breaks task retry of the edges lineage.
-        result._gd_sideboard_eager = bool(re.match(r"^local(\[[^\]]*\])?$", sc.master))
-        return result
 
     # shuffled fallback: sort-merge/hash joins on compact int keys carry
     # the signatures to the pairs — the 10^12 path

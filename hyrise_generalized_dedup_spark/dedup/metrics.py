@@ -11,8 +11,7 @@ Scale notes:
   driver-side (one Hadoop listStatus), not from a second Spark
   aggregation over the stage output — round-1 measured the per-stage
   metrics job as part of the fixed latency that capped scaling
-  efficiency. A row-granular histogram remains available via
-  partition_histogram() for ad-hoc analysis.
+  efficiency.
 - every filesystem touch goes through the Hadoop FS API (fsutil), so
   metrics land next to the checkpoints wherever out_dir lives
   (file://, hdfs://, s3a://), matching the Checkpointer."""
@@ -22,25 +21,9 @@ from __future__ import annotations
 import json
 import time
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .. import fsutil
-
-
-def partition_histogram(df: DataFrame, stage: str, config_hash: str, wall_ms: int) -> DataFrame:
-    """Row-granular per-partition histogram (one extra aggregation job —
-    use for ad-hoc skew analysis; the pipeline uses file-metadata
-    histograms instead)."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("config_hash", F.lit(config_hash))
-        .select("stage", "partition_id", "rows", "wall_ms", "config_hash")
-    )
 
 
 def file_histogram(spark: SparkSession, path: str) -> list[dict[str, object]]:

@@ -20,7 +20,7 @@ Spark-scale notes:
 CLI (spark-submit entry):
   python -m hyrise_generalized_dedup_spark.dedup.pipeline \
     --input synth:5000 --output /tmp/gd_out --master "local[8]" \
-    [--resume] [--cores 8]
+    [--resume] [--no-suffix] [--incremental] (--help lists every flag)
 """
 
 from __future__ import annotations
@@ -34,19 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import fsutil
 from ..config import GDConfig
-from ..session import shuffle_partitions
+from ..session import scratch_usage, shuffle_partitions
 from .cluster import connected_components
 from .gd import dedup_stats, gd_segments
-from .lsh import (
-    band_table,
-    candidate_pairs,
-    release_candidates,
-    retained_sideboard_dirs,
-    verified_edges,
-)
+from .lsh import band_table, candidate_pairs, verified_edges
 from .metrics import MetricsCollector
 from .minhash import signatures
-from .simhash import simhash_edges
+from .simhash import SIMHASH_BITS, simhash_edges
 from .suffix import suffix_edges
 
 STAGES = ("gd", "signatures", "reps", "candidates", "edges", "clusters", "suffix", "summary")
@@ -167,8 +161,6 @@ def gc_stale_checkpoints(
 
 
 # --- stage builders shared by run_pipeline and incremental_update ---
-# Builders that cache intermediates take ``write`` (DataFrame ->
-# checkpointed DataFrame) and release the caches once it has returned.
 
 
 def _sig_text(cfg: GDConfig):
@@ -253,16 +245,13 @@ def split_reps(rep_map: DataFrame) -> tuple[DataFrame, DataFrame]:
     return rep_sigs, exact_edges
 
 
-def build_candidates(rep_sigs: DataFrame, cfg: GDConfig, write) -> DataFrame:
+def candidate_table(rep_sigs: DataFrame, cfg: GDConfig) -> DataFrame:
     """candidates: LSH buckets over representatives, skew-routed."""
-    raw_pairs = candidate_pairs(band_table(rep_sigs, key_col="doc_id"), cfg, key_col="doc_id")
-    pairs = write(raw_pairs)
-    release_candidates(raw_pairs)  # checkpoint written — drop the cache
-    return pairs
+    return candidate_pairs(band_table(rep_sigs, key_col="doc_id"), cfg, key_col="doc_id")
 
 
-def build_edges(
-    pairs: DataFrame, rep_sigs: DataFrame, exact_edges: DataFrame, cfg: GDConfig, write
+def edge_table(
+    pairs: DataFrame, rep_sigs: DataFrame, exact_edges: DataFrame, cfg: GDConfig
 ) -> DataFrame:
     """edges: verified LSH ``pairs`` + simhash + the exact-dup edges."""
     # Broadcast decision sized on the REPRESENTATIVE count, not n_docs:
@@ -271,24 +260,19 @@ def build_edges(
     # shuffled path. rep_sigs reads the reps checkpoint, so this count is
     # one cheap scan, paid only when the edges stage actually runs.
     n_reps = rep_sigs.count()
-    lsh_raw = verified_edges(pairs, rep_sigs, cfg, key_col="doc_id", n_sigs=n_reps)
-    lsh_e = lsh_raw.select("key_a", "key_b", F.col("jaccard_est").alias("score"), "source")
-    sim_raw = simhash_edges(rep_sigs, cfg, key_col="doc_id")
-    sim_e = sim_raw.select(
+    lsh_e = verified_edges(pairs, rep_sigs, cfg, key_col="doc_id", n_sigs=n_reps).select(
+        "key_a", "key_b", F.col("jaccard_est").alias("score"), "source"
+    )
+    sim_e = simhash_edges(rep_sigs, cfg, key_col="doc_id").select(
         "key_a",
         "key_b",
-        (1.0 - F.col("hamming") / F.lit(cfg.simhash_bits)).alias("score"),
+        (1.0 - F.col("hamming") / F.lit(SIMHASH_BITS)).alias("score"),
         "source",
     )
-    edges = write(lsh_e.unionByName(sim_e).unionByName(exact_edges))
-    release_candidates(sim_raw)  # simhash's internal band cache
-    release_candidates(lsh_raw)  # verification's broadcast signature block
-    return edges
+    return lsh_e.unionByName(sim_e).unionByName(exact_edges)
 
 
-def build_clusters(
-    edges: DataFrame, docs: DataFrame, n_docs: int, cfg: GDConfig, write
-) -> DataFrame:
+def cluster_table(edges: DataFrame, docs: DataFrame, n_docs: int, cfg: GDConfig) -> DataFrame:
     """clusters: connected components, deterministic min-key id."""
     # lsh_star edges are hot-bucket clique approximations: kept for
     # connectivity (dropping them would silently cut recall under skew),
@@ -308,10 +292,7 @@ def build_clusters(
         key_col="doc_id",
         broadcast_labels_max=5_000_000 if n_docs < 5_000_000 else None,
     )
-    key_map = docs.select("doc_id", "doc_key")
-    clusters = write(cc.join(key_map, "doc_id").select("doc_key", "cluster_id"))
-    release_candidates(cc)  # CC's final label checkpoint
-    return clusters
+    return cc.join(docs.select("doc_id", "doc_key"), "doc_id").select("doc_key", "cluster_id")
 
 
 def suffix_docs(docs: DataFrame) -> DataFrame:
@@ -321,12 +302,26 @@ def suffix_docs(docs: DataFrame) -> DataFrame:
 
 def run_stage(ckpt: Checkpointer, metrics: MetricsCollector, stage: str, build, store):
     """Load ``stage`` if its checkpoint is done; else, inside the stage's
-    one MetricsCollector span, run ``build(write)``, where ``write(df)`` is
-    ``store(stage, df)`` and returns the written frame."""
+    one MetricsCollector span, write ``build()`` with ``store(stage, df)``
+    and return the written frame.
+
+    The one owner of what a stage pins: every RDD persisted while the
+    stage runs (a cache, CC's label checkpoint) is unpersisted when it
+    ends, on the error path too. The written frame is read back from its
+    checkpoint, so nothing downstream depends on them. A cache made
+    before the stage must be materialized before it, or it is freed with
+    the stage's own."""
     if ckpt.done(stage):
         return ckpt.load(stage)
     metrics.start(stage)
-    out = build(lambda df: store(stage, df))
+    jsc = ckpt.spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keySet().toArray())
+    try:
+        out = store(stage, build())
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in pinned:
+                rdd.unpersist(False)
     metrics.finish(stage, ckpt.written_path(stage))
     return out
 
@@ -392,7 +387,7 @@ def summarize(
     n_star_kept = int(by_source.get("lsh_star", 0))
     n_star_cand = int(pstats["n_star"] or 0)
     sfx = res.get("suffix_by_source")
-    retained = retained_sideboard_dirs()
+    n_sideboards, sideboard_bytes = scratch_usage("gd_sideboard")
     metrics.add(
         n_files=n_docs,
         n_candidate_pairs=int(pstats["n"]),
@@ -405,11 +400,11 @@ def summarize(
         n_multi_doc_clusters=int(cstats["n_multi"] or 0),
         n_suffix_edges=None if sfx is None else int(sfx.get("suffix", 0)),
         n_suffix_overflows=None if sfx is None else int(sfx.get("suffix_overflow", 0)),
-        # non-local masters retain sideboard source dirs on driver disk
-        # until interpreter exit (lazy addFile fetch, see dedup/lsh.py);
-        # surfaced here so multi-run sessions see the accumulation.
-        n_retained_sideboard_dirs=len(retained),
-        retained_sideboard_bytes=sum(b for _, b in retained),
+        # verification sideboards stay on driver disk until interpreter
+        # exit (lazy addFile fetch, see dedup/lsh.py); surfaced here so
+        # multi-run sessions see the accumulation.
+        n_retained_sideboard_dirs=n_sideboards,
+        retained_sideboard_bytes=sideboard_bytes,
         **res["stats"],
         **extra,
     )
@@ -439,25 +434,19 @@ def run_pipeline(
         def stage(name, build):
             return run_stage(ckpt, metrics, name, build, ckpt.materialize)
 
-        segments = stage("gd", lambda write: write(gd_table(docs, cfg)))
-        sigs = stage("signatures", lambda write: write(signature_table(docs, cfg)))
-        rep_map = stage("reps", lambda write: write(rep_table(sigs)))
+        segments = stage("gd", lambda: gd_table(docs, cfg))
+        sigs = stage("signatures", lambda: signature_table(docs, cfg))
+        rep_map = stage("reps", lambda: rep_table(sigs))
         rep_sigs, exact_edges = split_reps(rep_map)
-        pairs = stage("candidates", lambda write: build_candidates(rep_sigs, cfg, write))
-        edges = stage(
-            "edges", lambda write: build_edges(pairs, rep_sigs, exact_edges, cfg, write)
-        )
-        clusters = stage(
-            "clusters", lambda write: build_clusters(edges, docs, n_docs, cfg, write)
-        )
+        pairs = stage("candidates", lambda: candidate_table(rep_sigs, cfg))
+        edges = stage("edges", lambda: edge_table(pairs, rep_sigs, exact_edges, cfg))
+        clusters = stage("clusters", lambda: cluster_table(edges, docs, n_docs, cfg))
         suffix = None
         if with_suffix_stage:
             # exact substring pass within clusters
             suffix = stage(
                 "suffix",
-                lambda write: write(
-                    suffix_edges(suffix_docs(docs).join(clusters, "doc_key"), cfg)
-                ),
+                lambda: suffix_edges(suffix_docs(docs).join(clusters, "doc_key"), cfg),
             )
         return summarize(metrics, n_docs, segments, clusters, pairs, edges, suffix)
     finally:

@@ -285,7 +285,7 @@ def neardup_cluster_sizes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # be released in time: the driver collects the result after this
     # function returns (leak-free-session rule).
     sigs = barrier(sigs, "gd_gate_sigs")
-    pairs = candidate_pairs(band_table(sigs), CANON_CFG, persist=False)
+    pairs = candidate_pairs(band_table(sigs), CANON_CFG)
     edges = verified_edges(pairs, sigs, CANON_CFG).filter(
         FF.col("jaccard_est") >= CANON_CFG.jaccard_threshold
     )
@@ -334,7 +334,7 @@ def suffix_shared_substrings_query(spark: SparkSession, sf_dir: str) -> DataFram
     )
     # LSH-only clustering feeds the suffix pass here — skip simhash
     sigs = signatures(docs, cfg, text_col="text", key_col="doc_key", with_simhash=False)
-    pairs = candidate_pairs(band_table(sigs), cfg, persist=False)
+    pairs = candidate_pairs(band_table(sigs), cfg)
     edges = verified_edges(pairs, sigs, cfg).filter(
         F.col("jaccard_est") >= cfg.jaccard_threshold
     )

@@ -18,12 +18,14 @@ from pyspark.sql import DataFrame
 from ..config import GDConfig
 from .lsh import candidate_pairs
 
+SIMHASH_BITS = 64  # minhash.simhash64 computes 64-bit fingerprints
+
 
 def simhash_block_table(signatures: DataFrame, cfg: GDConfig, key_col: str = "doc_key") -> DataFrame:
     """(key, band_id, band_hash) where band_id = block index and band_hash =
     the block's bits — reuses the LSH bucket machinery verbatim."""
     nblocks = cfg.simhash_blocks
-    width = 64 // nblocks
+    width = SIMHASH_BITS // nblocks
     mask = (1 << width) - 1
     blocks = [
         F.struct(
@@ -41,26 +43,18 @@ def simhash_edges(
     signatures: DataFrame,
     cfg: GDConfig,
     key_col: str = "doc_key",
-    persist: bool = True,
 ) -> DataFrame:
-    """-> (key_a, key_b, hamming, source='simhash') verified edges.
-
-    With persist=True the intermediate band table stays cached; callers
-    that materialize the result must follow with
-    lsh.release_candidates(<returned df>)."""
+    """-> (key_a, key_b, hamming, source='simhash') verified edges."""
     blocks = simhash_block_table(signatures, cfg, key_col)
-    pairs = candidate_pairs(blocks, cfg, key_col, persist=persist)
+    pairs = candidate_pairs(blocks, cfg, key_col)
 
     sim = signatures.select(key_col, "simhash")
     sim_a = sim.select(F.col(key_col).alias("key_a"), F.col("simhash").alias("sim_a"))
     sim_b = sim.select(F.col(key_col).alias("key_b"), F.col("simhash").alias("sim_b"))
-    out = (
+    return (
         pairs.join(sim_a, "key_a")
         .join(sim_b, "key_b")
         .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
         .filter(F.col("hamming") <= cfg.simhash_hamming_max)
         .select("key_a", "key_b", "hamming", F.lit("simhash").alias("source"))
     )
-    if persist:
-        out._gd_persisted = getattr(pairs, "_gd_persisted", None)
-    return out

@@ -227,29 +227,6 @@ def packed_features(
 _BLOB_SCHEMA = "blob BINARY"
 
 
-def _batch_arrays(pdf: pd.DataFrame):
-    """Flatten one Arrow batch into (row_ids, idx, x, y) numpy arrays.
-    Shared by the gradient and scoring passes so both fold the dot
-    product in the identical (ascending-bucket, bincount) order."""
-    n = len(pdf)
-    lens = pdf["fb"].map(len).to_numpy(np.int64)
-    row_ids = np.repeat(np.arange(n, dtype=np.int64), lens)
-    idx = (
-        np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["fb"]])
-        if n and lens.sum()
-        else np.empty(0, np.int64)
-    )
-    cnts = (
-        np.concatenate([np.asarray(a, dtype=np.float64) for a in pdf["fcnt"]])
-        if n and lens.sum()
-        else np.empty(0, np.float64)
-    )
-    ntok = pdf["n_tokens"].to_numpy(np.float64)
-    x = cnts / np.repeat(np.where(ntok == 0.0, 1.0, ntok), lens) * X_SCALE
-    y = pdf["y"].to_numpy(np.int64)
-    return n, row_ids, idx, x, y
-
-
 def csr_blobs(packed: DataFrame) -> DataFrame:
     """Re-encode the packed feature rows as pickled CSR bundles, ONE
     binary row per Arrow batch. Every training iteration then streams a

@@ -24,6 +24,7 @@ fails on drift.
 from __future__ import annotations
 
 GOLDEN_DIR = "/root/repo/resources/goldens"
+GOLDEN_SF = "sf0.01"  # the one scale every committed golden was generated at
 
 # slot -> (registry module, registry dict name, ORDER BY cols for the file)
 GOLDENS: dict[str, tuple[str, str, list[str]]] = {
@@ -58,5 +59,5 @@ def golden_oracle(name: str, cols: list[str]) -> str:
     """DuckDB oracle SQL reading the committed golden for ``name``."""
     return (
         f"SELECT {', '.join(cols)} "
-        f"FROM read_parquet('{GOLDEN_DIR}/{name}.sf0_01.parquet')"
+        f"FROM read_parquet('{GOLDEN_DIR}/{name}.{GOLDEN_SF.replace('.', '_')}.parquet')"
     )

@@ -33,13 +33,25 @@ def scratch_dir(tag: str) -> str:
     """A new empty dir named ``<tag>_*`` under this process's scratch
     root. The root (``gd_scratch_*`` in the system temp dir) is made on
     first use and removed with everything under it when the interpreter
-    exits; a caller that is done with its dir earlier may delete it."""
+    exits; nothing deletes a dir earlier."""
     global _scratch_root
     with _scratch_lock:
         if _scratch_root is None:
             _scratch_root = tempfile.mkdtemp(prefix="gd_scratch_")
             atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
     return tempfile.mkdtemp(prefix=f"{tag}_", dir=_scratch_root)
+
+
+def scratch_usage(tag: str) -> tuple[int, int]:
+    """``(dirs, bytes)`` held by the ``scratch_dir(tag)`` dirs made so far."""
+    root = _scratch_root
+    if root is None:
+        return 0, 0
+    dirs = [e.path for e in os.scandir(root) if e.name.startswith(f"{tag}_")]
+    nbytes = sum(
+        os.path.getsize(os.path.join(d, f)) for top in dirs for d, _, fs in os.walk(top) for f in fs
+    )
+    return len(dirs), nbytes
 
 
 def barrier(df: DataFrame, tag: str) -> DataFrame:

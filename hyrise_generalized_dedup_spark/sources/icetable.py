@@ -399,11 +399,6 @@ def current_snapshot_id(spark: SparkSession, root: str) -> int:
     return int(_read_metadata(spark, root)["current_snapshot_id"])
 
 
-def _live_paths(spark: SparkSession, root: str, snapshot_id: int) -> list[str]:
-    manifest = _read_manifest(spark, root, snapshot_id)
-    return [fsutil.urljoin(root, f["path"]) for f in manifest["files"]]
-
-
 def _manifest_scan(spark: SparkSession, root: str, manifest: dict,
                    paths: list[str] | None = None) -> DataFrame:
     """Scan a manifest's files under its recorded schema.

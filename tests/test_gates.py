@@ -9,6 +9,8 @@ composed oracle, (c) no component query lost its individual oracle.
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -50,6 +52,14 @@ def test_no_component_lost_an_oracle():
     # passthrough slots must exist in the full registry
     for slot in PASSTHROUGH_SLOTS:
         assert slot in full_q, slot
+
+
+def test_registry_import_failure_raises(monkeypatch):
+    """A registry module that cannot be imported fails the registry build
+    instead of silently dropping its queries from the driver surface."""
+    monkeypatch.setitem(sys.modules, "hyrise_generalized_dedup_spark.stats.queries", None)
+    with pytest.raises(ImportError):
+        entrymod._full_registries()
 
 
 def test_every_registry_query_is_reached():

@@ -246,7 +246,7 @@ def test_star_floor_precision_gate(spark):
         "repo string, path string, commit string, lang string, content string",
     ).withColumn("doc_key", F.col("commit"))
     sigs = signatures(df, cfg, key_col="doc_key")
-    edges = verified_edges(candidate_pairs(band_table(sigs), cfg, persist=False), sigs, cfg)
+    edges = verified_edges(candidate_pairs(band_table(sigs), cfg), sigs, cfg)
     cc = connected_components(edges)
     assign = {r.doc_key: r.cluster_id for r in cc.collect()}
     truth = lambda k: k[0]  # family letter is the ground-truth cluster
@@ -417,7 +417,7 @@ def test_verified_edges_paths_agree(spark, corpus, pipeline_edges):
     """The python-broadcast gather path (sigs fit the budget) and the
     shuffled join fallback (the 10^12 path) must emit identical edges."""
     sigs, _ = pipeline_edges
-    pairs = candidate_pairs(band_table(sigs), CFG, persist=False)
+    pairs = candidate_pairs(band_table(sigs), CFG)
     fast = verified_edges(pairs, sigs, CFG, broadcast_sigs=True)
     slow = verified_edges(pairs, sigs, CFG, broadcast_sigs=False)
     a = sorted(((r.key_a, r.key_b, round(r.jaccard_est, 9), r.source) for r in fast.collect()))

@@ -39,6 +39,9 @@ def test_summary_shape(summary):
     assert 0.0 <= float(summary["dedup_ratio"]) <= 1.0
     # exact duplicates guarantee segment-level dedup
     assert summary["distinct_bases"] < summary["total_segments"]
+    # the verification sideboard stays under the scratch root until exit
+    assert summary["n_retained_sideboard_dirs"] >= 1
+    assert summary["retained_sideboard_bytes"] > 0
 
 
 def test_checkpoints_and_metrics_on_disk(out_dir, summary):
@@ -214,6 +217,33 @@ def test_no_persisted_leftovers_after_pipeline(spark, corpus, tmp_path):
     assert s["n_new_files"] > 0 and s["n_removed_files"] > 0
     leaked = persisted_ids() - before
     assert not leaked, f"incremental_update leaked persisted RDD ids {leaked}"
+
+
+@pytest.mark.parametrize("failing", ["candidates", "edges"])
+def test_failed_stage_leaves_nothing_persisted(spark, corpus, tmp_path, monkeypatch, failing):
+    """A stage that raises after its write (here: its _DONE marker) must
+    not pin what it persisted; run_stage frees it on the error path too."""
+    from hyrise_generalized_dedup_spark.dedup.pipeline import Checkpointer
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    mark = Checkpointer._mark
+
+    def failing_mark(self, stage):
+        if stage == failing:
+            raise OSError(f"injected marker failure: {stage}")
+        mark(self, stage)
+
+    monkeypatch.setattr(Checkpointer, "_mark", failing_mark)
+    before = persisted_ids()
+    with pytest.raises(OSError, match=failing):
+        run_pipeline(
+            spark, to_spark(spark, corpus), str(tmp_path / "out"),
+            resume=False, with_suffix_stage=False,
+        )
+    leaked = persisted_ids() - before
+    assert not leaked, f"failed {failing} stage leaked persisted RDD ids {leaked}"
 
 
 def test_metrics_legacy_dir_collision(spark, corpus, tmp_path):
@@ -410,27 +440,6 @@ def test_shuffle_partitions_helper_tolerates_auto(spark):
         sparkContext=SimpleNamespace(defaultParallelism=7),
     )
     assert shuffle_partitions(fake) == 7
-
-
-def test_sideboard_eager_master_classification():
-    """`local-cluster[...]` masters run separate executor processes that
-    fetch addFile sources lazily — they must NOT be classified as
-    eager-copy (which would delete the sideboard source dir and break
-    task retry). ADVICE r4."""
-    import re
-
-    pat = r"^local(\[[^\]]*\])?$"
-    assert re.match(pat, "local")
-    assert re.match(pat, "local[8]")
-    assert re.match(pat, "local[*]")
-    assert not re.match(pat, "local-cluster[2,1,1024]")
-    assert not re.match(pat, "spark://host:7077")
-    # the pattern under test is the one in lsh.py
-    import inspect
-
-    from hyrise_generalized_dedup_spark.dedup import lsh
-
-    assert pat.replace("\\", "\\\\") in inspect.getsource(lsh).replace("\\", "\\\\")
 
 
 # --- content normalizers (code payload: format- and rename-invariant) ---
