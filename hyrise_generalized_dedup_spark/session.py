@@ -13,6 +13,14 @@ change (see BENCH/BASELINE.md scaling protocol).
 Every temp dir the engine makes lives under one per-process scratch
 root (``scratch_dir``), removed by one exit hook; ``barrier`` is the one
 Parquet materialization built on it.
+
+A local master's Python workers are forked by ``worker_daemon`` (set as
+``spark.python.daemon.module``; the directory or ``--py-files`` zip that
+holds this package goes on the workers' PYTHONPATH), which drops the
+~0.25 s of CPU that each task otherwise spends re-reading pyspark.zip.
+A cluster master keeps pyspark's default daemon: its executors cannot
+import this package before the first task (see ``worker_daemon``).
+``extra_conf`` overrides either key.
 """
 
 from __future__ import annotations
@@ -83,6 +91,18 @@ def shuffle_partitions(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """The worker-daemon confs for ``master``: empty unless it is local."""
+    if not master.startswith("local"):
+        return {}
+    # the dir that holds the package, or the zip when imported from one
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {
+        "spark.python.daemon.module": f"{__package__}.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": root,
+    }
+
+
 def get_spark(
     app_name: str = "hyrise-generalized-dedup-spark",
     master: str | None = None,
@@ -128,6 +148,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

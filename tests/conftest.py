@@ -12,18 +12,10 @@ from hyrise_generalized_dedup_spark.session import get_spark  # noqa: E402
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
 
-# pyspark's daemon minus its per-task zip re-read (see spark_worker_daemon.py)
-WORKER_CONF = {
-    "spark.python.daemon.module": "spark_worker_daemon",
-    "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parent),
-}
-
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="pytest", master="local[8]", shuffle_partitions=8, extra_conf=WORKER_CONF
-    )
+    s = get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
 

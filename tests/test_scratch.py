@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import subprocess
@@ -64,12 +63,10 @@ def test_rewritten_leaves_write_nothing(spark, sf_tiny, tmp_path, monkeypatch):
 def test_process_exit_leaves_tmpdir_empty(sf_tiny, tmp_path):
     """A process that runs the barrier, sideboard, stream and snapshot-
     table queries leaves nothing in its TMPDIR once it exits."""
-    from conftest import WORKER_CONF
-
     child = f"""
 import __spark_entry__ as e
 from hyrise_generalized_dedup_spark.session import get_spark
-spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={json.dumps(WORKER_CONF)})
+spark = get_spark(master="local[2]", shuffle_partitions=2)
 qs = e._full_registries()[0]
 for name in ("stream_dedup_census", "neardup_cluster_sizes", "iceberg_time_travel"):
     assert qs[name](spark, {sf_tiny!r}).collect(), name
